@@ -330,11 +330,19 @@ def _make_mark():
 
 
 def _source_files(source_path: str) -> list[str]:
-    return sorted(
+    """The source dir's parquet files; ValueError naming the path when there
+    are none, before Spark fails on it with an opaque schema-inference
+    error."""
+    if not os.path.isdir(source_path):
+        raise ValueError(f"build source {source_path!r} is not a directory")
+    files = sorted(
         os.path.join(source_path, f)
         for f in os.listdir(source_path)
         if f.endswith(".parquet")
     )
+    if not files:
+        raise ValueError(f"build source {source_path!r} holds no .parquet files")
+    return files
 
 
 def _stage_a_unit(
@@ -710,6 +718,7 @@ def build_index(
     ``fault_injector(stage, unit)`` is a test hook called before each unit
     commits — raising from it simulates a mid-build crash.
     """
+    files = _source_files(source_path)
     _mark = _make_mark()
     io = TableIO(out_dir)
     if not resume:
@@ -736,7 +745,6 @@ def build_index(
             io.drop(spark, "dictionary")
     done = _ledger_done(io, spark) if resume else set()
 
-    files = _source_files(source_path)
     units = max(1, min(units, len(files)))
     unit_files = [(i, files[i::units]) for i in range(units)]
     _run_stage_a(spark, io, unit_files, n_shards, source_path, done, fault_injector, _mark)
@@ -791,6 +799,7 @@ def add_to_index(
     ``n_shards`` and ``block_size`` must match the original build; the
     stage-B grouping is reused from the ledger.
     """
+    files = _source_files(source_path)
     _mark = _make_mark()
     io = TableIO(out_dir)
     latest = _ledger_latest(io, spark)
@@ -819,7 +828,6 @@ def add_to_index(
     else:
         first_u = max(r["unit_id"] for r in a_rows) + 1
 
-    files = _source_files(source_path)
     units = max(1, min(units, len(files)))
     unit_files = [(first_u + i, files[i::units]) for i in range(units)]
     _run_stage_a(spark, io, unit_files, n_shards, source_path, done, fault_injector, _mark)

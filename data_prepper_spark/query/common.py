@@ -12,6 +12,10 @@ from ..tableio import TableIO
 K1 = 1.2
 B = 0.75
 
+# the dictionary table as index/build._write_dictionary writes it; reading
+# with it declared skips Spark's schema-inference job on every open
+DICT_SCHEMA = "term_hash long, term string, df long, cf long, max_wtf double"
+
 
 def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
@@ -58,13 +62,16 @@ def dict_df(spark: SparkSession, io: TableIO):
     it adds one small union + per-term aggregation over term-pruned
     scans. All dictionary readers go through here so NRT segments are
     visible to term stats, multi-term expansion, and join-order hints."""
-    base = io.read(spark, "dictionary") if io.exists("dictionary") else None
+    if not io.exists("dictionary"):
+        base = None
+    elif io.catalog == "parquet":
+        base = spark.read.schema(DICT_SCHEMA).parquet(io.rpath("dictionary"))
+    else:
+        base = io.read(spark, "dictionary")
     seg = segdict_path(io)
     if seg is None:
         if base is None:
-            return spark.createDataFrame(
-                [], "term string, df long, cf long, term_hash long, max_wtf double"
-            )
+            return spark.createDataFrame([], DICT_SCHEMA)
         return base
     cols = ["term", "df", "cf", "term_hash", "max_wtf"]
     sdf = spark.read.parquet(seg).select(*cols)

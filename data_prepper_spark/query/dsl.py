@@ -1308,6 +1308,12 @@ def _bucket_agg(spark: SparkSession, matched: DataFrame, spec: dict) -> DataFram
         )
         after = body.get("after")
         if after is not None:
+            # a missing or extra cursor key: the first one found, by name
+            bad = [n for n in names if n not in after] + [a for a in after if a not in names]
+            if bad:
+                raise ValueError(
+                    f"composite 'after' key {bad[0]!r} does not match the sources {names}"
+                )
             grouped = grouped.where(
                 _after_predicate([(n, True) for n in names],
                                  [after[n] for n in names])

@@ -2,12 +2,25 @@
 
 ``bm25_topk_wand`` (query/wand.py) is the one-shot path — every call pays
 stats lookup + a cold scan. A real search deployment keeps the index hot:
-this engine loads ``corpus_stats`` once, keeps a driver-side LRU of
-dictionary rows for seen terms, and (optionally) persists the
-``posting_blocks`` DataFrame so repeat queries scan executor memory
-instead of parquet. That mirrors how the reference's delegate (OpenSearch/
-Lucene) serves queries from page-cached segment files, and is the
-configuration the p50/p95 latency numbers in BENCH are measured on.
+this engine loads ``corpus_stats`` once, opens the dictionary once, keeps a
+driver-side cache of dictionary rows for seen terms, and (optionally)
+persists the ``posting_blocks`` DataFrame so repeat queries scan executor
+memory instead of parquet. That mirrors how the reference's delegate
+(OpenSearch/Lucene) serves queries from page-cached segment files.
+
+Serving split. The dictionary gives every query term's df before any job
+runs, so ``topk_rows`` knows a query's posting count (Σdf) up front:
+
+- at most ``wand.DRIVER_MAX_POSTINGS`` postings and at most
+  ``MAX_DEAD_IDS`` tombstones: the term-filtered blocks come to the driver
+  through ONE Arrow collect and the shard kernels run there. One Spark job
+  per query whose terms are all cached (two on a dictionary-cache miss),
+  no Python worker, no merge job;
+- above either bound: the distributed plan ``topk`` returns — shard
+  kernels in ``mapInPandas`` workers, TakeOrderedAndProject merge — then
+  collected.
+
+``topk`` and ``topk_batch`` stay lazy DataFrames on the distributed plan.
 
 At design scale the blocks table exceeds cluster RAM; ``persist_blocks``
 uses MEMORY_AND_DISK so hot terms stay resident and cold ones spill —
@@ -16,14 +29,24 @@ the same economics as Lucene's page cache.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections import OrderedDict
+
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..analyzer import tokenize_py
 from ..tableio import TableIO
+from . import wand
+from .common import dict_df, load_stats_full, tombstone_count
 from .common import idf as _idf
-from .wand import _wand_shard
+
+# tombstoned ids up to this count are held in the driver: the live-docs
+# filter is a literal NOT-IN and the driver-side serving path drops them in
+# Python; above it the engine anti-joins the tombstones table instead
+MAX_DEAD_IDS = 1000
+
+_RESULT_ROW = Row("rank", "doc_id", "score")
 
 
 class IndexQueryEngine:
@@ -42,18 +65,10 @@ class IndexQueryEngine:
         # Opt-in result cache keyed by (query, k): a search tier's hottest
         # queries repeat, and the engine instance is pinned to one index
         # snapshot (generation resolved at construction), so cached rows
-        # can never go stale within the instance. A hit skips the whole
-        # distributed kernel; the trade is that a MISS materializes
-        # inside topk (the caller's own .collect() then reads a
-        # LocalTableScan, ~ms). Off by default to preserve the fully-lazy
-        # one-job contract (NOTES.md documents why eager driver-side
-        # shortcuts are usually a loss here — this one only pays on hits).
-        from collections import OrderedDict
-
+        # can never go stale within the instance. A hit returns rows with
+        # no Spark job; ``topk`` wraps them in a LocalTableScan.
         self._result_cache_size = result_cache_size
         self._result_cache: OrderedDict[tuple[str, int], list] = OrderedDict()
-        from .common import load_stats_full
-        from .wand import EXHAUSTIVE_THRESHOLD
 
         self.n_docs, self.avgdl, self.layered = load_stats_full(spark, self.io)
         # layered (NRT) index: stored block-max wtf bounds embed a stale
@@ -61,30 +76,25 @@ class IndexQueryEngine:
         # forcing the exhaustive kernel (see _Cursor docstring)
         self._bounds = "tf" if self.layered else "wtf"
         self._thr = (
-            EXHAUSTIVE_THRESHOLD if exhaustive_threshold is None else exhaustive_threshold
+            wand.EXHAUSTIVE_THRESHOLD if exhaustive_threshold is None else exhaustive_threshold
         )
         self._dict_cache: dict[str, dict | None] = {}
-        # pin BOTH versioned tables to the generation current at
-        # construction (rpath resolves the pointer once): with the GC
-        # grace period (_gc_generations retain>=1) a refresh that bumps
-        # the pointer leaves this engine's snapshot readable until it is
-        # re-opened — resolving the dictionary per call would mix new-gen
+        # open the dictionary and the blocks ONCE, together: both versioned
+        # tables resolve the generation pointer here, so a later refresh
+        # that bumps it leaves this engine on one consistent snapshot (the
+        # GC grace period keeps it readable) instead of mixing new-gen
         # df/idf stats with old-gen blocks. Layered segment side
         # dictionaries live INSIDE the pinned blocks generation, so the
-        # same snapshot covers them.
-        import os as _os
-
-        self._dict_path = (
-            self.io.rpath("dictionary") if self.io.exists("dictionary") else None
-        )
+        # same snapshot covers them. Reusing the DataFrame also spares
+        # every dictionary-cache miss a file listing and schema read.
+        self._dict = dict_df(spark, self.io)
         # live-docs snapshot, pinned at construction like the generation
         # pointer: deletes issued later need a new engine (same rule as
         # refresh). Serving kernels widen per-shard top-k by the tombstone
-        # count so post-filter top-k stays exact; the count shrinks back
-        # to zero when refresh purges — Lucene's delete-then-merge cost
-        # curve. Zero overhead when no delete ever happened.
-        from .common import tombstone_count
-
+        # count so post-filter top-k stays exact. Refresh purges the
+        # tombstoned postings but never clears the tombstones table, so
+        # every later engine keeps the widening and the live-docs filter.
+        # Zero overhead when no delete ever happened.
         self._n_tombstones = tombstone_count(spark, self.io)
         self._dead_ids: list[int] = (
             [
@@ -94,11 +104,9 @@ class IndexQueryEngine:
                 .distinct()
                 .collect()
             ]
-            if 0 < self._n_tombstones <= 1000
+            if 0 < self._n_tombstones <= MAX_DEAD_IDS
             else []
         )
-        _seg = self.io.rpath("posting_blocks/_segdict")
-        self._segdict_path = _seg if _os.path.isdir(_seg) else None
         self.blocks = self.io.read(spark, "posting_blocks")
         self._prepartitioned = persist_blocks
         if persist_blocks:
@@ -112,41 +120,11 @@ class IndexQueryEngine:
                 StorageLevel.MEMORY_AND_DISK
             )
 
-    def _dict_df(self) -> DataFrame:
-        if self.io.catalog != "parquet":
-            from .common import dict_df
-
-            return dict_df(self.spark, self.io)  # iceberg: snapshot commit
-        cols = ["term", "df", "cf", "term_hash", "max_wtf"]
-        base = (
-            self.spark.read.parquet(self._dict_path).select(*cols)
-            if self._dict_path is not None
-            else None
-        )
-        if self._segdict_path is None:
-            if base is None:
-                return self.spark.createDataFrame(
-                    [], "term string, df long, cf long, term_hash long, max_wtf double"
-                )
-            return base
-        seg = self.spark.read.parquet(self._segdict_path).select(*cols)
-        return (
-            (base.unionByName(seg) if base is not None else seg)
-            .groupBy("term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.sum("cf").alias("cf"),
-                F.max("term_hash").alias("term_hash"),
-                F.max("max_wtf").alias("max_wtf"),
-            )
-        )
-
     def _term_stats(self, terms: list[str]) -> dict[str, dict]:
         missing = [t for t in terms if t not in self._dict_cache]
         if missing:
             rows = (
-                self._dict_df()
-                .where(F.col("term").isin(missing))
+                self._dict.where(F.col("term").isin(missing))
                 .select("term", "term_hash", "df", "max_wtf")
                 .collect()
             )
@@ -163,6 +141,11 @@ class IndexQueryEngine:
                     self._dict_cache[t] = None
         return {t: s for t in terms if (s := self._dict_cache.get(t)) is not None}
 
+    def _hstats(self, query_text: str) -> dict[int, dict]:
+        """{term_hash: stats} of the query's terms found in the dictionary."""
+        tstats = self._term_stats(sorted(set(tokenize_py(query_text))))
+        return {s["hash"]: s for s in tstats.values()}
+
     _TOPK_SCHEMA = "rank int, doc_id long, score double"
 
     def topk(self, query_text: str, k: int = 10) -> DataFrame:
@@ -172,29 +155,48 @@ class IndexQueryEngine:
             return self.spark.createDataFrame(
                 self.topk_rows(query_text, k), self._TOPK_SCHEMA
             )
-        return self._topk_df(query_text, k)
+        return self._topk_df(self._hstats(query_text), k)
 
     def topk_rows(self, query_text: str, k: int = 10) -> list:
-        """Collected result rows, result cache consulted first — the
-        SERVING-path API. Measured floor on this class of host: even a
-        10-row LocalTableScan costs ~0.5 s per ``collect()`` (fixed
-        driver/job overhead), so a cache that returns a DataFrame can
-        never beat that floor; returning the cached rows directly makes a
-        hit cost zero Spark jobs (~microseconds). Requires
-        ``result_cache_size`` > 0; uncached engines compute and collect.
+        """Collected (rank, doc_id, score) rows — the SERVING-path API.
+
+        Queries within the driver-path bounds (module docstring) run as one
+        Arrow collect plus the shard kernels in the driver; the rest
+        collect the distributed ``topk`` plan. With ``result_cache_size``
+        > 0 the (query, k) cache is consulted first, and a hit runs no
+        Spark job at all.
         """
         if not self._result_cache_size:
-            return self._topk_df(query_text, k).collect()
+            return self._serve(query_text, k)
         key = (query_text, k)
         hit = self._result_cache.get(key)
         if hit is not None:
             self._result_cache.move_to_end(key)
             return hit
-        rows = self._topk_df(query_text, k).collect()
+        rows = self._serve(query_text, k)
         self._result_cache[key] = rows
         if len(self._result_cache) > self._result_cache_size:
             self._result_cache.popitem(last=False)
         return rows
+
+    def _serve(self, query_text: str, k: int) -> list:
+        hstats = self._hstats(query_text)
+        if not hstats:
+            return []
+        postings = sum(s["df"] for s in hstats.values())
+        if postings > wand.DRIVER_MAX_POSTINGS or self._n_tombstones > MAX_DEAD_IDS:
+            return self._topk_df(hstats, k).collect()
+        # one job: cached-block scan + term filter, Arrow batches straight
+        # into the driver (no Python worker, no exchange, no merge stage)
+        frame = self.blocks.where(F.col("term_hash").isin(list(hstats))).toPandas()
+        hits = wand.topk_by_shard(
+            [frame], hstats, self.avgdl, k + self._n_tombstones, self._thr, self._bounds
+        )
+        if self._dead_ids:
+            dead = set(self._dead_ids)
+            hits = [h for h in hits if h[0] not in dead]
+        hits.sort(key=lambda h: (-h[1], h[0]))
+        return [_RESULT_ROW(i, d, s) for i, (d, s) in enumerate(hits[:k], start=1)]
 
     def _drop_dead(self, df: DataFrame) -> DataFrame:
         """Live-docs filter over a (small) candidate frame: literal
@@ -210,33 +212,14 @@ class IndexQueryEngine:
         )
         return df.join(F.broadcast(t), "doc_id", "left_anti")
 
-    def _topk_df(self, query_text: str, k: int) -> DataFrame:
-        terms = sorted(set(tokenize_py(query_text)))
-        tstats = self._term_stats(terms)
-        empty = "rank int, doc_id long, score double"
-        if not tstats:
-            return self.spark.createDataFrame([], empty)
-        hstats = {s["hash"]: s for s in tstats.values()}
+    def _topk_df(self, hstats: dict[int, dict], k: int) -> DataFrame:
+        if not hstats:
+            return self.spark.createDataFrame([], self._TOPK_SCHEMA)
         avgdl, n = self.avgdl, k + self._n_tombstones
         thr, bounds = self._thr, self._bounds
 
-        import pandas as pd
-
         def per_shard(pdfs):
-            buf: dict[int, list[pd.DataFrame]] = {}
-            for pdf in pdfs:
-                for s, grp in pdf.groupby("shard"):
-                    buf.setdefault(int(s), []).append(grp)
-            rows = []
-            for s, parts in buf.items():
-                rows.extend(_wand_shard(pd.concat(parts), hstats, avgdl, n, thr, bounds))
-            yield (
-                pd.DataFrame(rows, columns=["doc_id", "score"])
-                if rows
-                else pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-                )
-            )
+            yield wand.hits_frame(wand.topk_by_shard(pdfs, hstats, avgdl, n, thr, bounds))
 
         filtered = self.blocks.where(F.col("term_hash").isin(list(hstats)))
         if not self._prepartitioned:
@@ -263,38 +246,31 @@ class IndexQueryEngine:
         each shard partition runs WAND once per query over its (already
         grouped) blocks — per-query latency amortizes the job's fixed
         scheduling cost, the way a search tier batches its request queue.
-        Results are rank-identical to per-query ``topk``.
+        The dictionary is consulted once for the union of the batch's
+        terms. Results are rank-identical to per-query ``topk``.
         """
-        per_q: dict[str, dict[int, dict]] = {}
-        all_hashes: set[int] = set()
-        for qid, text in queries.items():
-            terms = sorted(set(tokenize_py(text)))
-            tstats = self._term_stats(terms)
-            hstats = {s["hash"]: s for s in tstats.values()}
-            per_q[qid] = hstats
-            all_hashes.update(hstats)
+        q_terms = {qid: sorted(set(tokenize_py(text))) for qid, text in queries.items()}
+        tstats = self._term_stats(sorted({t for ts in q_terms.values() for t in ts}))
+        per_q: dict[str, dict[int, dict]] = {
+            qid: {tstats[t]["hash"]: tstats[t] for t in ts if t in tstats}
+            for qid, ts in q_terms.items()
+        }
+        all_hashes = {s["hash"] for s in tstats.values()}
         empty = "query_id string, rank int, doc_id long, score double"
         if not all_hashes:
             return self.spark.createDataFrame([], empty)
         avgdl, n = self.avgdl, k + self._n_tombstones
-        from .wand import batch_exhaustive_shard
-
         thr, bounds = self._thr, self._bounds
 
         import pandas as pd
 
         def per_shard(pdfs):
-            buf: dict[int, list[pd.DataFrame]] = {}
-            for pdf in pdfs:
-                for s, grp in pdf.groupby("shard"):
-                    buf.setdefault(int(s), []).append(grp)
             rows = []
-            for s, parts in buf.items():
-                shard_df = pd.concat(parts)
+            for shard_df in wand.shard_frames(pdfs):
                 if int(shard_df["n_docs"].sum()) <= thr:
                     # decode-once batch kernel: each term's blocks decoded
                     # a single time for ALL queries in the batch
-                    rows.extend(batch_exhaustive_shard(shard_df, per_q, avgdl, n))
+                    rows.extend(wand.batch_exhaustive_shard(shard_df, per_q, avgdl, n))
                     continue
                 for qid, hstats in per_q.items():
                     if not hstats:
@@ -302,7 +278,7 @@ class IndexQueryEngine:
                     sub = shard_df[shard_df["term_hash"].isin(list(hstats))]
                     if len(sub) == 0:
                         continue
-                    for doc_id, score in _wand_shard(sub, hstats, avgdl, n, thr, bounds):
+                    for doc_id, score in wand._wand_shard(sub, hstats, avgdl, n, thr, bounds):
                         rows.append((qid, doc_id, score))
             yield (
                 pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])

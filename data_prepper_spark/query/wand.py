@@ -4,8 +4,11 @@ Distributed strategy: shards are disjoint doc_id ranges (index/build.py),
 so each shard runs an independent, fully sequential block-max WAND over the
 query terms' blocks and emits a local top-k; the global answer is the merge
 (``ORDER BY score DESC, doc_id ASC LIMIT k`` = TakeOrderedAndProject). No
-cross-shard state, no driver-side postings — the only data leaving an
-executor is k rows per shard.
+cross-shard state — the only data leaving an executor is k rows per shard.
+Small queries skip the executors instead: IndexQueryEngine.topk_rows runs
+the same per-shard loop (``topk_by_shard``) in the driver over one Arrow
+collect of the query's blocks while their postings stay within
+``DRIVER_MAX_POSTINGS``.
 
 The scan is pruned by ``term IN (...)`` pushed to parquet (blocks are
 written sorted by term within each shard partition), so a query touches
@@ -209,6 +212,52 @@ def _exhaustive_shard(
 # below this many postings (block metadata, no decode needed) per shard the
 # vectorized exhaustive path wins; above it, theta/block-max pruning pays.
 EXHAUSTIVE_THRESHOLD = 200_000
+
+# at or below this many query postings (Σdf over the query's terms, known
+# from the dictionary before any job runs) IndexQueryEngine.topk_rows pulls
+# the term-filtered blocks through one Arrow collect and runs the shard
+# kernels in the driver; above it the kernels run distributed in Python
+# workers. Set at the lowest measured crossover where both paths take
+# equal time on 4 vCPUs (NOTES.md, "Driver-side serving path").
+DRIVER_MAX_POSTINGS = 120_000
+
+
+def shard_frames(pdfs: Iterator[pd.DataFrame] | list[pd.DataFrame]) -> list[pd.DataFrame]:
+    """One frame per shard from a stream of block frames: a shard's blocks
+    may arrive split across Arrow batches."""
+    buf: dict[int, list[pd.DataFrame]] = {}
+    for pdf in pdfs:
+        for s, grp in pdf.groupby("shard"):
+            buf.setdefault(int(s), []).append(grp)
+    return [pd.concat(parts) for parts in buf.values()]
+
+
+def topk_by_shard(
+    pdfs: Iterator[pd.DataFrame] | list[pd.DataFrame],
+    hstats: dict[int, dict],
+    avgdl: float,
+    k: int,
+    exhaustive_threshold: int,
+    bounds: str,
+) -> list[tuple[int, float]]:
+    """Shard-local top-k for every shard in a stream of block frames:
+    (doc_id, score) hits, k per shard, in no global order. The one kernel
+    loop behind the mapInPandas closures and the engine's driver-side
+    path."""
+    hits: list[tuple[int, float]] = []
+    for shard_df in shard_frames(pdfs):
+        hits.extend(_wand_shard(shard_df, hstats, avgdl, k, exhaustive_threshold, bounds))
+    return hits
+
+
+def hits_frame(hits: list[tuple[int, float]]) -> pd.DataFrame:
+    """(doc_id long, score double) frame of kernel hits for mapInPandas."""
+    return pd.DataFrame(
+        {
+            "doc_id": pd.Series([d for d, _ in hits], dtype="int64"),
+            "score": pd.Series([s for _, s in hits], dtype="float64"),
+        }
+    )
 
 
 def _topk_from_arrays(
@@ -616,8 +665,8 @@ def bm25_topk_wand(
     bounds = "tf" if layered else "wtf"
     thr = EXHAUSTIVE_THRESHOLD if exhaustive_threshold is None else exhaustive_threshold
     # live-docs: widen the per-shard kernel top-k by the tombstone count
-    # so the post-filter global top-k stays exact (Lucene's pre-merge
-    # deleted-docs cost curve; refresh purges it back to zero)
+    # so the post-filter global top-k stays exact (refresh purges the
+    # postings but keeps the tombstones, so the widening stays)
     from .common import live_filter, tombstone_count
 
     kk = k + tombstone_count(spark, io)
@@ -625,17 +674,7 @@ def bm25_topk_wand(
     def per_shard(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # mapInPandas over shard-partitioned scan: each incoming batch holds
         # one shard's term-blocks (we repartition by shard below)
-        buf: dict[int, list[pd.DataFrame]] = {}
-        for pdf in pdfs:
-            for s, grp in pdf.groupby("shard"):
-                buf.setdefault(int(s), []).append(grp)
-        rows = []
-        for s, parts in buf.items():
-            hits = _wand_shard(pd.concat(parts), hstats, avgdl, kk, thr, bounds)
-            rows.extend(hits)
-        yield pd.DataFrame(rows, columns=["doc_id", "score"]) if rows else pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
+        yield hits_frame(topk_by_shard(pdfs, hstats, avgdl, kk, thr, bounds))
 
     local = live_filter(
         spark, io,

@@ -765,6 +765,23 @@ def test_composite_agg_full_walk(spark, dsl_index):
     assert pages == want
 
 
+@pytest.mark.parametrize(
+    "after,key",
+    [({"lang": "go"}, "len"), ({"lang": "go", "len": 0.0, "size": 1}, "size")],
+)
+def test_composite_after_keys_validated(spark, dsl_index, after, key):
+    """A cursor missing a source, or carrying a key no source declares,
+    fails with a ValueError naming that key, not a bare KeyError."""
+    from data_prepper_spark.query.dsl import aggregations
+
+    spec = {"composite": {"sources": [
+        {"lang": {"terms": {"field": "lang"}}},
+        {"len": {"histogram": {"field": "doc_len", "interval": 25}}},
+    ], "size": 3, "after": after}}
+    with pytest.raises(ValueError, match=repr(key)):
+        aggregations(spark, dsl_index, {"match": {"content": "def"}}, {"c": spec})
+
+
 def test_search_body_collapse(spark, dsl_index):
     """collapse keeps one best hit per group under the sort order."""
     from data_prepper_spark.query.dsl import search_body

@@ -1,5 +1,7 @@
 """Index-build invariants (FIXTURES.md §3) + resumability."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -110,3 +112,24 @@ def test_resume_identical(spark, corpus_dir, tmp_path):
         .collect()[0][0]
     )
     assert bchk(f"{broken}/posting_blocks") == bchk(f"{clean}/posting_blocks")
+
+
+def test_build_rejects_bad_source(spark, tmp_path):
+    """An empty, non-parquet or missing source dir fails with a ValueError
+    naming the path before any Spark job runs, and leaves no index."""
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    text = tmp_path / "text"
+    text.mkdir()
+    (text / "a.csv").write_text("repo,path\n")
+    out = tmp_path / "idx"
+    sc = spark.sparkContext
+    sc.setJobGroup("bad_source", "build_index on a bad source")
+    try:
+        for src in (empty, text, tmp_path / "missing"):
+            with pytest.raises(ValueError, match=re.escape(str(src))):
+                build_index(spark, str(src), str(out), n_shards=4, units=1, shard_groups=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("bad_source")
+    assert not out.exists()

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_prepper_spark.analyzer import duckdb_tokens_sql
+from data_prepper_spark.index.build import build_index
 from data_prepper_spark.query.bm25 import bm25_topk
 from data_prepper_spark.query.wand import bm25_topk_wand
 from tests.oracle import bm25_topk as oracle_topk
@@ -84,14 +85,20 @@ def test_pointer_wand_equals_exhaustive(spark, index_dir, corpus_docs, q, k, mon
     assert fast == want and slow == want
 
 
-def test_batch_equals_per_query(spark, index_dir):
+def test_batch_equals_per_query(spark, index_dir, monkeypatch):
     """topk_batch (decode-once batch kernel) must be rank-identical to
-    per-query topk for every query in the batch."""
+    per-query topk for every query in the batch, and looks the union of
+    the batch's terms up in one dictionary call."""
     from data_prepper_spark.query.engine import IndexQueryEngine
 
     eng = IndexQueryEngine(spark, index_dir, persist_blocks=False)
     qmap = {f"q{i}": q for i, (q, _) in enumerate(QUERIES[:6])}
+    lookups = []
+    term_stats = eng._term_stats
+    monkeypatch.setattr(eng, "_term_stats", lambda terms: lookups.append(terms) or term_stats(terms))
     batch = eng.topk_batch(qmap, 10).collect()
+    assert len(lookups) == 1
+    monkeypatch.undo()
     got = {}
     for r in batch:
         got.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], round(r["score"], 6)))
@@ -169,3 +176,171 @@ def test_engine_topk_rows_serving_path(spark, index_dir):
     # uncached engine: topk_rows still computes correctly
     plain = IndexQueryEngine(spark, index_dir, persist_blocks=False)
     assert plain.topk_rows("def return value", 10) == want
+
+
+# driver-side serving path (IndexQueryEngine.topk_rows): rare term, hot
+# term, multi-term, absent term, and k above the number of hits
+SERVING = [
+    ("parseJson buffer", 10),
+    ("the", 10),
+    ("the int return i", 10),
+    ("qqqqxyzw", 10),
+    ("scanChunk emitState", 1000),
+]
+
+
+def _rows(rows):
+    return _norm([(r.rank, r.doc_id, r.score) for r in rows])
+
+
+def _spy_fallback(monkeypatch, eng):
+    """Count calls into the distributed plan (the topk_rows fallback)."""
+    calls = []
+    plan = eng._topk_df
+
+    def spy(hstats, k):
+        calls.append(k)
+        return plan(hstats, k)
+
+    monkeypatch.setattr(eng, "_topk_df", spy)
+    return calls
+
+
+def _live_oracle(corpus_docs, q, k, dead=()):
+    """Oracle top-k with tombstoned docs dropped after scoring (deleted docs
+    still count in the statistics until refresh)."""
+    live = [(d, s) for _, d, s in oracle_topk(corpus_docs, q, 10**6) if d not in dead]
+    return _norm([(i, d, s) for i, (d, s) in enumerate(live[:k], start=1)])
+
+
+@pytest.mark.parametrize("q,k", SERVING)
+def test_topk_rows_driver_path(spark, index_dir, corpus_docs, q, k, monkeypatch):
+    """topk_rows answers on the driver (no distributed plan) with the same
+    rows as the lazy topk() plan and the oracle."""
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    eng = IndexQueryEngine(spark, index_dir)
+    fallback = _spy_fallback(monkeypatch, eng)
+    got = eng.topk_rows(q, k)
+    assert fallback == []
+    assert got == eng.topk(q, k).collect()
+    assert _rows(got) == _norm(oracle_topk(corpus_docs, q, k))
+    eng.close()
+
+
+def test_topk_rows_fallback_above_driver_max(spark, index_dir, corpus_docs, monkeypatch):
+    """Queries whose postings exceed DRIVER_MAX_POSTINGS take the
+    distributed plan, with the same answers."""
+    from data_prepper_spark.query import wand
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    eng = IndexQueryEngine(spark, index_dir, persist_blocks=False)
+    driver = {q: eng.topk_rows(q, k) for q, k in SERVING}
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+    fallback = _spy_fallback(monkeypatch, eng)
+    for q, k in SERVING:
+        assert eng.topk_rows(q, k) == driver[q], q
+        assert _rows(driver[q]) == _norm(oracle_topk(corpus_docs, q, k)), q
+    # every query with a dictionary hit falls back; the absent one has Σdf 0
+    assert len(fallback) == len(SERVING) - 1
+
+
+def test_topk_rows_layered_with_result_cache(spark, corpus_dir, corpus_docs, tmp_path, monkeypatch):
+    """Layered (NRT) index: the driver path prunes with tf-only bounds like
+    the distributed one, and the result cache serves its rows."""
+    import os
+    import shutil
+
+    from data_prepper_spark.index.build import add_to_index
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    files = sorted(f for f in os.listdir(corpus_dir) if f.endswith(".parquet"))
+    s1, s2 = str(tmp_path / "s1"), str(tmp_path / "s2")
+    os.makedirs(s1), os.makedirs(s2)
+    for i, f in enumerate(files):
+        shutil.copy(os.path.join(corpus_dir, f), s1 if i < len(files) // 2 else s2)
+    idx = str(tmp_path / "idx")
+    build_index(spark, s1, idx, n_shards=8, units=1, shard_groups=2)
+    add_to_index(spark, s2, idx, n_shards=8, units=1, remerge=False)
+
+    plain = IndexQueryEngine(spark, idx, persist_blocks=False)
+    cached = IndexQueryEngine(spark, idx, result_cache_size=4)
+    # exhaustive_threshold=0 puts every shard on the block-max kernel
+    pruned = IndexQueryEngine(spark, idx, exhaustive_threshold=0)
+    assert cached._bounds == pruned._bounds == "tf"
+    fallback = _spy_fallback(monkeypatch, cached)
+    for q, k in SERVING:
+        want = plain.topk(q, k).collect()
+        got = cached.topk_rows(q, k)
+        assert got == want, q
+        assert cached.topk_rows(q, k) is got  # cache hit: the same rows
+        assert _rows(pruned.topk_rows(q, k)) == _rows(want), q
+        assert _rows(got) == _norm(oracle_topk(corpus_docs, q, k)), q
+    assert fallback == []
+    cached.close()
+    pruned.close()
+
+
+def test_topk_rows_deletes(spark, corpus_dir, corpus_docs, tmp_path, monkeypatch):
+    """Tombstones: up to MAX_DEAD_IDS they are dropped on the driver path;
+    beyond it topk_rows falls back to the distributed anti-join plan. Both
+    return the oracle's live top-k."""
+    from data_prepper_spark.index.build import delete_docs
+    from data_prepper_spark.query import engine as engine_mod
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus_dir, idx, n_shards=8, units=2, shard_groups=2)
+    q = "def return"
+    ranked = oracle_topk(corpus_docs, q, 10**6)
+    victims = [ranked[0][1], ranked[2][1]]
+    delete_docs(spark, idx, victims)
+
+    few = IndexQueryEngine(spark, idx)
+    assert 0 < few._n_tombstones <= engine_mod.MAX_DEAD_IDS
+    fallback = _spy_fallback(monkeypatch, few)
+    cases = [(q, 5), ("the", 10), ("parseJson buffer", 10)]
+    got = {qq: few.topk_rows(qq, k) for qq, k in cases}
+    assert fallback == []
+    for qq, k in cases:
+        assert got[qq] == few.topk(qq, k).collect(), qq
+        assert _rows(got[qq]) == _live_oracle(corpus_docs, qq, k, victims), qq
+    few.close()
+
+    # more tombstones than the driver holds: ids absent from the corpus
+    # pad the table past MAX_DEAD_IDS, the two real victims stay in it
+    live_ids = {d for d, _ in corpus_docs}
+    pad = [i for i in range(1, 1200) if i not in live_ids][: engine_mod.MAX_DEAD_IDS]
+    delete_docs(spark, idx, pad)
+    many = IndexQueryEngine(spark, idx)
+    assert many._n_tombstones > engine_mod.MAX_DEAD_IDS and not many._dead_ids
+    fallback = _spy_fallback(monkeypatch, many)
+    got = many.topk_rows(q, 5)
+    assert len(fallback) == 1
+    assert _rows(got) == _live_oracle(corpus_docs, q, 5, victims)
+    many.close()
+
+
+def test_topk_rows_job_structure(spark, index_dir):
+    """A warm query (block cache filled, every term in the dictionary
+    cache) runs exactly one Spark job: the Arrow collect of its blocks. A
+    query with an uncached term adds one dictionary job."""
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    sc = spark.sparkContext
+    eng = IndexQueryEngine(spark, index_dir)
+    eng.topk_rows("the return", 10)  # fills the block cache
+
+    def jobs(group, q):
+        sc.setJobGroup(group, q)
+        try:
+            rows = eng.topk_rows(q, 10)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("serving_warm", "the return") == 1
+    assert jobs("serving_cold", "parseJson buffer") == 2
+    assert jobs("serving_rewarm", "parseJson buffer") == 1
+    eng.close()
