@@ -215,16 +215,19 @@ def user_agent_uap(
     from pyspark.sql.types import StringType, StructField, StructType
 
     rules = load_uap_rules(regexes_yaml)
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(
-            target,
-            StructType([StructField(c, StringType(), True) for c in
-                        ("name", "version", "os", "os_version", "device", "original")]),
-            True,
-        )]
+    parsed_field = StructField(
+        target,
+        StructType([StructField(c, StringType(), True) for c in
+                    ("name", "version", "os", "os_version", "device", "original")]),
+        True,
     )
-    cols = df.columns
+    # an existing ``target`` is replaced in place, like withColumn on the
+    # curated path, so a re-run never yields two columns of one name
+    fields = [parsed_field if f.name == target else f for f in df.schema.fields]
+    if target not in df.columns:
+        fields.append(parsed_field)
+    out_schema = StructType(fields)
+    cols = out_schema.fieldNames()
 
     def gen(batches):
         ua_rules = [
@@ -278,7 +281,7 @@ def user_agent_uap(
         for pdf in batches:
             parsed = [parse_one(s) for s in pdf[source]]
             pdf[target] = pd.Series(parsed, index=pdf.index, dtype="object")
-            yield pdf[cols + [target]]
+            yield pdf[cols]
 
     out = df.mapInPandas(gen, out_schema)
     if when is not None:

@@ -257,7 +257,9 @@ def ivf_train(
     iters: int = 10,
 ) -> list[list[float]]:
     """Spherical k-means centroids from a DETERMINISTIC sample (ordered by
-    id — reproducible across runs and cluster sizes, unlike rdd.sample).
+    a hash of the id — reproducible across runs and cluster sizes, unlike
+    rdd.sample, and spread over the whole id range, so ids assigned in
+    cluster order do not leave later clusters out of the sample).
 
     IVF economics at 100 TB: training touches a driver-side sample
     (thousands of rows), assignment is one Arrow-batched matmul pass over
@@ -270,7 +272,7 @@ def ivf_train(
 
     rows = (
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy("id")
+        .orderBy(F.xxhash64("id"), "id")
         .limit(sample_size)
         .collect()
     )

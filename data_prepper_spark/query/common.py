@@ -111,25 +111,45 @@ def query_term_stats(
     }
 
 
-def live_filter(spark, io, df, broadcast_side: bool = True):
-    """Lucene live-docs filtering: anti-join the ``tombstones`` table
-    (index/build.delete_docs) when it exists. Deleted docs vanish from
-    results immediately; corpus statistics keep counting them until
-    refresh_index purges (delete-then-merge semantics). Zero overhead on
-    an index that never saw a delete (one existence check, no job).
-    ``io=None`` (index-free adhoc compilers) is a no-op — deletes are an
-    index concept; adhoc paths score whatever frame they are given."""
+# tombstoned ids up to this count are held in the driver: the live-docs
+# filter is a literal NOT-IN and the engine's driver-side serving paths drop
+# them in Python; above it the filter anti-joins the tombstones table
+MAX_DEAD_IDS = 1000
+
+
+def tombstones(spark, io) -> tuple[int, list[int]]:
+    """Live-docs snapshot: (distinct tombstoned ids, those ids when there
+    are at most ``MAX_DEAD_IDS``, else []). Serving kernels widen their
+    per-shard top-k by the count so post-filter top-k stays exact. No job
+    on an index that never saw a delete (one existence check)."""
     if io is None or not io.exists("tombstones"):
-        return df
+        return 0, []
     t = spark.read.parquet(io.path("tombstones")).select("doc_id").distinct()
-    if broadcast_side:
-        t = F.broadcast(t)
+    ids = [int(r["doc_id"]) for r in t.limit(MAX_DEAD_IDS + 1).collect()]
+    if len(ids) <= MAX_DEAD_IDS:
+        return len(ids), ids
+    return t.count(), []
+
+
+def live_filter(spark, io, df, dead: tuple[int, list[int]] | None = None):
+    """Lucene live-docs filtering: drop tombstoned ``doc_id``s
+    (index/build.delete_docs). Deleted docs vanish from results
+    immediately; corpus statistics keep counting them until refresh_index
+    purges (delete-then-merge semantics). ``dead`` is a ``tombstones``
+    snapshot the caller already holds (the engine pins one at
+    construction); without it the filter takes one. Up to
+    ``MAX_DEAD_IDS`` tombstones it is a literal NOT-IN, no join; above it
+    a plain left_anti join with no broadcast hint, so AQE picks broadcast
+    or shuffle from the table's measured size. Zero overhead on an index
+    that never saw a delete. ``io=None`` (index-free adhoc compilers) is a
+    no-op — deletes are an index concept; adhoc paths score whatever frame
+    they are given."""
+    if io is None:
+        return df
+    n, ids = tombstones(spark, io) if dead is None else dead
+    if not n:
+        return df
+    if ids:
+        return df.where(~F.col("doc_id").isin(ids))
+    t = spark.read.parquet(io.path("tombstones")).select("doc_id").distinct()
     return df.join(t, "doc_id", "left_anti")
-
-
-def tombstone_count(spark, io) -> int:
-    """Distinct tombstoned ids (0 when none): serving kernels widen their
-    per-shard top-k by this so post-filter top-k stays exact."""
-    if not io.exists("tombstones"):
-        return 0
-    return spark.read.parquet(io.path("tombstones")).select("doc_id").distinct().count()

@@ -9,18 +9,22 @@ memory instead of parquet. That mirrors how the reference's delegate
 (OpenSearch/Lucene) serves queries from page-cached segment files.
 
 Serving split. The dictionary gives every query term's df before any job
-runs, so ``topk_rows`` knows a query's posting count (Σdf) up front:
+runs, so ``topk_rows`` knows a query's posting count (Σdf) up front, and
+``topk_batch`` the Σdf over the union of its queries' terms:
 
 - at most ``wand.DRIVER_MAX_POSTINGS`` postings and at most
   ``MAX_DEAD_IDS`` tombstones: the term-filtered blocks come to the driver
-  through ONE Arrow collect and the shard kernels run there. One Spark job
-  per query whose terms are all cached (two on a dictionary-cache miss),
-  no Python worker, no merge job;
-- above either bound: the distributed plan ``topk`` returns — shard
-  kernels in ``mapInPandas`` workers, TakeOrderedAndProject merge — then
-  collected.
+  through ONE Arrow collect and the shard kernels run there, no Python
+  worker, no merge or rank job. One Spark job when every term is in the
+  dictionary cache, two on a miss. ``topk_batch`` returns its rows as a
+  DataFrame over an Arrow table, a LocalTableScan whose collect runs no
+  further job;
+- above either bound: the distributed plan — shard kernels in
+  ``mapInPandas`` workers, TakeOrderedAndProject merge (a per-query
+  window rank for batches).
 
-``topk`` and ``topk_batch`` stay lazy DataFrames on the distributed plan.
+``topk`` is the lazy distributed plan, or with ``result_cache_size`` > 0
+the cached ``topk_rows`` answer wrapped like the batch rows.
 
 At design scale the blocks table exceeds cluster RAM; ``persist_blocks``
 uses MEMORY_AND_DISK so hot terms stay resident and cold ones spill —
@@ -31,6 +35,8 @@ from __future__ import annotations
 
 from collections import OrderedDict
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -38,15 +44,12 @@ from pyspark.storagelevel import StorageLevel
 from ..analyzer import tokenize_py
 from ..tableio import TableIO
 from . import wand
-from .common import dict_df, load_stats_full, tombstone_count
+from .common import MAX_DEAD_IDS, dict_df, live_filter, load_stats_full, tombstones
 from .common import idf as _idf
 
-# tombstoned ids up to this count are held in the driver: the live-docs
-# filter is a literal NOT-IN and the driver-side serving path drops them in
-# Python; above it the engine anti-joins the tombstones table instead
-MAX_DEAD_IDS = 1000
-
 _RESULT_ROW = Row("rank", "doc_id", "score")
+_TOPK_SCHEMA = pa.schema([("rank", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())])
+_BATCH_SCHEMA = pa.schema([("query_id", pa.string()), *_TOPK_SCHEMA])
 
 
 class IndexQueryEngine:
@@ -95,18 +98,7 @@ class IndexQueryEngine:
         # tombstoned postings but never clears the tombstones table, so
         # every later engine keeps the widening and the live-docs filter.
         # Zero overhead when no delete ever happened.
-        self._n_tombstones = tombstone_count(spark, self.io)
-        self._dead_ids: list[int] = (
-            [
-                int(r["doc_id"])
-                for r in spark.read.parquet(self.io.path("tombstones"))
-                .select("doc_id")
-                .distinct()
-                .collect()
-            ]
-            if 0 < self._n_tombstones <= MAX_DEAD_IDS
-            else []
-        )
+        self._n_tombstones, self._dead_ids = tombstones(spark, self.io)
         self.blocks = self.io.read(spark, "posting_blocks")
         self._prepartitioned = persist_blocks
         if persist_blocks:
@@ -146,15 +138,19 @@ class IndexQueryEngine:
         tstats = self._term_stats(sorted(set(tokenize_py(query_text))))
         return {s["hash"]: s for s in tstats.values()}
 
-    _TOPK_SCHEMA = "rank int, doc_id long, score double"
+    def _local_df(self, rows: list, schema: pa.Schema) -> DataFrame:
+        """Driver-side rows as a DataFrame over an Arrow table: Spark reads
+        it back in the JVM, so collecting it runs no Python worker (a list
+        of tuples would be pickled through a PythonRDD instead)."""
+        cols = list(zip(*rows)) if rows else [()] * len(schema)
+        arrays = [pa.array(c, type=f.type) for c, f in zip(cols, schema)]
+        return self.spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema))
 
     def topk(self, query_text: str, k: int = 10) -> DataFrame:
         """(rank int, doc_id long, score double) — block-max WAND per shard,
         TakeOrderedAndProject merge. One Spark job on the warm path."""
         if self._result_cache_size:
-            return self.spark.createDataFrame(
-                self.topk_rows(query_text, k), self._TOPK_SCHEMA
-            )
+            return self._local_df(self.topk_rows(query_text, k), _TOPK_SCHEMA)
         return self._topk_df(self._hstats(query_text), k)
 
     def topk_rows(self, query_text: str, k: int = 10) -> list:
@@ -179,42 +175,41 @@ class IndexQueryEngine:
             self._result_cache.popitem(last=False)
         return rows
 
-    def _serve(self, query_text: str, k: int) -> list:
-        hstats = self._hstats(query_text)
-        if not hstats:
-            return []
+    def _on_driver(self, hstats: dict[int, dict]) -> bool:
+        """Serve on the driver: the terms' postings and the tombstones
+        are within the driver-path bounds (module docstring)."""
         postings = sum(s["df"] for s in hstats.values())
-        if postings > wand.DRIVER_MAX_POSTINGS or self._n_tombstones > MAX_DEAD_IDS:
-            return self._topk_df(hstats, k).collect()
-        # one job: cached-block scan + term filter, Arrow batches straight
-        # into the driver (no Python worker, no exchange, no merge stage)
-        frame = self.blocks.where(F.col("term_hash").isin(list(hstats))).toPandas()
-        hits = wand.topk_by_shard(
-            [frame], hstats, self.avgdl, k + self._n_tombstones, self._thr, self._bounds
-        )
+        return postings <= wand.DRIVER_MAX_POSTINGS and self._n_tombstones <= MAX_DEAD_IDS
+
+    def _blocks_frame(self, hstats: dict[int, dict]) -> pd.DataFrame:
+        """One job: cached-block scan + term filter, Arrow batches straight
+        into the driver (no Python worker, no exchange, no merge stage)."""
+        return self.blocks.where(F.col("term_hash").isin(list(hstats))).toPandas()
+
+    def _ranked(self, hits: list[tuple[int, float]], k: int) -> list[tuple[int, int, float]]:
+        """Global top-k of one query's shard hits: dead ids dropped, then
+        (rank, doc_id, score) by score desc, doc_id asc."""
         if self._dead_ids:
             dead = set(self._dead_ids)
             hits = [h for h in hits if h[0] not in dead]
         hits.sort(key=lambda h: (-h[1], h[0]))
-        return [_RESULT_ROW(i, d, s) for i, (d, s) in enumerate(hits[:k], start=1)]
+        return [(i, d, s) for i, (d, s) in enumerate(hits[:k], start=1)]
 
-    def _drop_dead(self, df: DataFrame) -> DataFrame:
-        """Live-docs filter over a (small) candidate frame: literal
-        NOT-IN for few tombstones, broadcast anti-join beyond that."""
-        if not self._n_tombstones:
-            return df
-        if self._dead_ids:
-            return df.where(~F.col("doc_id").isin(self._dead_ids))
-        t = (
-            self.spark.read.parquet(self.io.path("tombstones"))
-            .select("doc_id")
-            .distinct()
+    def _serve(self, query_text: str, k: int) -> list:
+        hstats = self._hstats(query_text)
+        if not hstats:
+            return []
+        if not self._on_driver(hstats):
+            return self._topk_df(hstats, k).collect()
+        hits = wand.topk_by_shard(
+            [self._blocks_frame(hstats)], hstats, self.avgdl, k + self._n_tombstones,
+            self._thr, self._bounds,
         )
-        return df.join(F.broadcast(t), "doc_id", "left_anti")
+        return [_RESULT_ROW(*r) for r in self._ranked(hits, k)]
 
     def _topk_df(self, hstats: dict[int, dict], k: int) -> DataFrame:
         if not hstats:
-            return self.spark.createDataFrame([], self._TOPK_SCHEMA)
+            return self._local_df([], _TOPK_SCHEMA)
         avgdl, n = self.avgdl, k + self._n_tombstones
         thr, bounds = self._thr, self._bounds
 
@@ -224,8 +219,10 @@ class IndexQueryEngine:
         filtered = self.blocks.where(F.col("term_hash").isin(list(hstats)))
         if not self._prepartitioned:
             filtered = filtered.repartition(self.shard_partitions, "shard")
-        local = self._drop_dead(
-            filtered.mapInPandas(per_shard, "doc_id long, score double")
+        local = live_filter(
+            self.spark, self.io,
+            filtered.mapInPandas(per_shard, "doc_id long, score double"),
+            (self._n_tombstones, self._dead_ids),
         )
         topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         from pyspark.sql.window import Window
@@ -239,15 +236,19 @@ class IndexQueryEngine:
         return topk.select(w.alias("rank"), "doc_id", "score")
 
     def topk_batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
-        """Evaluate MANY queries in ONE Spark job: (query_id string,
-        rank int, doc_id long, score double).
+        """Evaluate MANY queries at once: (query_id string, rank int,
+        doc_id long, score double).
 
-        The blocks scan filters on the union of all query-term hashes and
-        each shard partition runs WAND once per query over its (already
-        grouped) blocks — per-query latency amortizes the job's fixed
-        scheduling cost, the way a search tier batches its request queue.
         The dictionary is consulted once for the union of the batch's
-        terms. Results are rank-identical to per-query ``topk``.
+        terms, and the blocks scan filters on the union of their hashes.
+        Within the driver-path bounds over that union (module docstring)
+        the blocks come through one Arrow collect, the batch kernels run
+        in the driver, and the rows return as a DataFrame over an Arrow
+        table. Above them each shard partition of one ``mapInPandas`` job
+        runs every query over its blocks and a window ranks the hits.
+        Either way per-query latency amortizes one job's fixed cost, the
+        way a search tier batches its request queue, and results are
+        rank-identical to per-query ``topk``.
         """
         q_terms = {qid: sorted(set(tokenize_py(text))) for qid, text in queries.items()}
         tstats = self._term_stats(sorted({t for ts in q_terms.values() for t in ts}))
@@ -255,48 +256,34 @@ class IndexQueryEngine:
             qid: {tstats[t]["hash"]: tstats[t] for t in ts if t in tstats}
             for qid, ts in q_terms.items()
         }
-        all_hashes = {s["hash"] for s in tstats.values()}
-        empty = "query_id string, rank int, doc_id long, score double"
-        if not all_hashes:
-            return self.spark.createDataFrame([], empty)
+        union = {s["hash"]: s for s in tstats.values()}
+        if not union:
+            return self._local_df([], _BATCH_SCHEMA)
         avgdl, n = self.avgdl, k + self._n_tombstones
         thr, bounds = self._thr, self._bounds
-
-        import pandas as pd
-
-        def per_shard(pdfs):
-            rows = []
-            for shard_df in wand.shard_frames(pdfs):
-                if int(shard_df["n_docs"].sum()) <= thr:
-                    # decode-once batch kernel: each term's blocks decoded
-                    # a single time for ALL queries in the batch
-                    rows.extend(wand.batch_exhaustive_shard(shard_df, per_q, avgdl, n))
-                    continue
-                for qid, hstats in per_q.items():
-                    if not hstats:
-                        continue
-                    sub = shard_df[shard_df["term_hash"].isin(list(hstats))]
-                    if len(sub) == 0:
-                        continue
-                    for doc_id, score in wand._wand_shard(sub, hstats, avgdl, n, thr, bounds):
-                        rows.append((qid, doc_id, score))
-            yield (
-                pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
-                if rows
-                else pd.DataFrame(
-                    {
-                        "query_id": pd.Series(dtype="object"),
-                        "doc_id": pd.Series(dtype="int64"),
-                        "score": pd.Series(dtype="float64"),
-                    }
-                )
+        if self._on_driver(union):
+            by_q: dict[str, list[tuple[int, float]]] = {}
+            for qid, d, s in wand.batch_topk_by_shard(
+                [self._blocks_frame(union)], per_q, avgdl, n, thr, bounds
+            ):
+                by_q.setdefault(qid, []).append((d, s))
+            return self._local_df(
+                [(qid, *r) for qid in per_q for r in self._ranked(by_q.get(qid, []), k)],
+                _BATCH_SCHEMA,
             )
 
-        filtered = self.blocks.where(F.col("term_hash").isin(list(all_hashes)))
+        def per_shard(pdfs):
+            yield wand.batch_hits_frame(
+                wand.batch_topk_by_shard(pdfs, per_q, avgdl, n, thr, bounds)
+            )
+
+        filtered = self.blocks.where(F.col("term_hash").isin(list(union)))
         if not self._prepartitioned:
             filtered = filtered.repartition(self.shard_partitions, "shard")
-        local = self._drop_dead(
-            filtered.mapInPandas(per_shard, "query_id string, doc_id long, score double")
+        local = live_filter(
+            self.spark, self.io,
+            filtered.mapInPandas(per_shard, "query_id string, doc_id long, score double"),
+            (self._n_tombstones, self._dead_ids),
         )
         from pyspark.sql.window import Window
 

@@ -5,9 +5,10 @@ so each shard runs an independent, fully sequential block-max WAND over the
 query terms' blocks and emits a local top-k; the global answer is the merge
 (``ORDER BY score DESC, doc_id ASC LIMIT k`` = TakeOrderedAndProject). No
 cross-shard state — the only data leaving an executor is k rows per shard.
-Small queries skip the executors instead: IndexQueryEngine.topk_rows runs
-the same per-shard loop (``topk_by_shard``) in the driver over one Arrow
-collect of the query's blocks while their postings stay within
+Small queries skip the executors instead: IndexQueryEngine.topk_rows and
+topk_batch run the same per-shard loops (``topk_by_shard``,
+``batch_topk_by_shard``) in the driver over one Arrow collect of the
+query's (batch's) blocks while their postings stay within
 ``DRIVER_MAX_POSTINGS``.
 
 The scan is pruned by ``term IN (...)`` pushed to parquet (blocks are
@@ -213,12 +214,13 @@ def _exhaustive_shard(
 # vectorized exhaustive path wins; above it, theta/block-max pruning pays.
 EXHAUSTIVE_THRESHOLD = 200_000
 
-# at or below this many query postings (Σdf over the query's terms, known
-# from the dictionary before any job runs) IndexQueryEngine.topk_rows pulls
-# the term-filtered blocks through one Arrow collect and runs the shard
-# kernels in the driver; above it the kernels run distributed in Python
-# workers. Set at the lowest measured crossover where both paths take
-# equal time on 4 vCPUs (NOTES.md, "Driver-side serving path").
+# at or below this many query postings (Σdf over the query's terms, or
+# over the union of a batch's terms, known from the dictionary before any
+# job runs) IndexQueryEngine.topk_rows and topk_batch pull the
+# term-filtered blocks through one Arrow collect and run the shard kernels
+# in the driver; above it the kernels run distributed in Python workers.
+# Set at the lowest measured crossover where both paths take equal time on
+# 4 vCPUs (NOTES.md, "Driver-side serving path").
 DRIVER_MAX_POSTINGS = 120_000
 
 
@@ -256,6 +258,47 @@ def hits_frame(hits: list[tuple[int, float]]) -> pd.DataFrame:
         {
             "doc_id": pd.Series([d for d, _ in hits], dtype="int64"),
             "score": pd.Series([s for _, s in hits], dtype="float64"),
+        }
+    )
+
+
+def batch_topk_by_shard(
+    pdfs: Iterator[pd.DataFrame] | list[pd.DataFrame],
+    per_q: dict[str, dict[int, dict]],
+    avgdl: float,
+    k: int,
+    exhaustive_threshold: int,
+    bounds: str,
+) -> list[tuple[str, int, float]]:
+    """Shard-local top-k of every query in a batch, for every shard in a
+    stream of block frames: (query_id, doc_id, score) hits, k per (shard,
+    query), in no global order. The batch twin of ``topk_by_shard``,
+    behind the engine's ``topk_batch`` closure and its driver-side path.
+    A shard within the exhaustive threshold decodes each term's blocks
+    once for all queries (``batch_exhaustive_shard``)."""
+    hits: list[tuple[str, int, float]] = []
+    for shard_df in shard_frames(pdfs):
+        if int(shard_df["n_docs"].sum()) <= exhaustive_threshold:
+            hits.extend(batch_exhaustive_shard(shard_df, per_q, avgdl, k))
+            continue
+        for qid, hstats in per_q.items():
+            sub = shard_df[shard_df["term_hash"].isin(list(hstats))]
+            if len(sub):
+                hits.extend(
+                    (qid, d, s)
+                    for d, s in _wand_shard(sub, hstats, avgdl, k, exhaustive_threshold, bounds)
+                )
+    return hits
+
+
+def batch_hits_frame(hits: list[tuple[str, int, float]]) -> pd.DataFrame:
+    """(query_id string, doc_id long, score double) frame of batch kernel
+    hits for mapInPandas."""
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series([q for q, _, _ in hits], dtype="object"),
+            "doc_id": pd.Series([d for _, d, _ in hits], dtype="int64"),
+            "score": pd.Series([s for _, _, s in hits], dtype="float64"),
         }
     )
 
@@ -667,9 +710,10 @@ def bm25_topk_wand(
     # live-docs: widen the per-shard kernel top-k by the tombstone count
     # so the post-filter global top-k stays exact (refresh purges the
     # postings but keeps the tombstones, so the widening stays)
-    from .common import live_filter, tombstone_count
+    from .common import live_filter, tombstones
 
-    kk = k + tombstone_count(spark, io)
+    dead = tombstones(spark, io)
+    kk = k + dead[0]
 
     def per_shard(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # mapInPandas over shard-partitioned scan: each incoming batch holds
@@ -679,6 +723,7 @@ def bm25_topk_wand(
     local = live_filter(
         spark, io,
         blocks.repartition("shard").mapInPandas(per_shard, "doc_id long, score double"),
+        dead,
     )
     topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     from pyspark.sql.window import Window

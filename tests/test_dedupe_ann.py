@@ -313,3 +313,33 @@ def test_ivf_identity_and_clustered_recall(spark):
     assert allprobe == exact  # nprobe=all == brute force, rank-identical
     narrow = {r.id for r in ivf_topk(assigned, q, cents, k=10, nprobe=2).collect()}
     assert len(narrow & set(exact)) / 10 >= 0.9
+
+
+def test_ivf_train_sample_spans_cluster_sorted_ids(spark):
+    """Ids assigned in cluster order with a training sample smaller than
+    the table: the sample is ordered by a hash of the id, so it covers
+    every cluster (ordering by id took only the first clusters' rows)
+    and a narrow probe keeps recall@10 on the last cluster."""
+    import numpy as np
+
+    from data_prepper_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_assign,
+        ivf_topk,
+        ivf_train,
+    )
+
+    rng = np.random.default_rng(5)
+    centers = rng.normal(size=(6, 24)) * 3
+    rows, vid = [], 0
+    for c in centers:
+        for _ in range(40):
+            v = c + rng.normal(size=24)
+            rows.append((vid, [float(x) for x in v / np.linalg.norm(v)])); vid += 1
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = ivf_train(df, "embedding", "vec_id", dim=24, n_centroids=6, sample_size=60)
+    assigned = ivf_assign(df, "embedding", "vec_id", cents)
+    q = rows[-3][1]
+    exact = [r.id for r in brute_force_topk(df, "embedding", "vec_id", q, k=10).collect()]
+    narrow = {r.id for r in ivf_topk(assigned, q, cents, k=10, nprobe=1).collect()}
+    assert len(narrow & set(exact)) / 10 >= 0.9

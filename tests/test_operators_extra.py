@@ -184,3 +184,25 @@ def test_user_agent_extended_ruleset(spark):
     }
     for ua, want in cases.items():
         assert got[ua] == want, (ua, got[ua], want)
+
+
+def test_user_agent_uap_rerun_replaces_target(spark, tmp_path):
+    """Running the uap-core path twice over its own output replaces the
+    target column in place, like the curated withColumn path, instead of
+    appending a second column of the same name."""
+    p = tmp_path / "regexes.yaml"
+    p.write_text(
+        "user_agent_parsers:\n"
+        "  - regex: '(Firefox)/(\\d+)\\.(\\d+)'\n"
+        "os_parsers: []\n"
+        "device_parsers: []\n"
+    )
+    df = spark.createDataFrame(
+        [(1, "Mozilla/5.0 (X11; Linux x86_64) Firefox/121.0")], "id long, ua string"
+    )
+    once = user_agent(df, "ua", regexes_yaml=str(p))
+    twice = user_agent(once, "ua", regexes_yaml=str(p))
+    curated = user_agent(user_agent(df, "ua"), "ua")
+    assert once.columns == twice.columns == curated.columns == ["id", "ua", "user_agent"]
+    row = twice.collect()[0]
+    assert (row.user_agent.name, row.user_agent.version) == ("Firefox", "121.0")

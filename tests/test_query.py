@@ -213,6 +213,45 @@ def _live_oracle(corpus_docs, q, k, dead=()):
     return _norm([(i, d, s) for i, (d, s) in enumerate(live[:k], start=1)])
 
 
+# topk_batch shapes: rare term, hot term, multi-term, every term absent and
+# a repeated query; k above the corpus's 200 docs exceeds every query's hits
+BATCH = {
+    "rare": "parseJson buffer",
+    "hot": "the",
+    "multi": "the int return i",
+    "absent": "qqqqxyzw zzz_absent_term",
+    "again": "parseJson buffer",
+}
+BATCH_K = 250
+
+
+def _by_query(rows):
+    got = {qid: [] for qid in BATCH}
+    for r in rows:
+        got[r["query_id"]].append((r["rank"], r["doc_id"], round(r["score"], 6)))
+    return {qid: sorted(v) for qid, v in got.items()}
+
+
+def _check_batch(eng, corpus_docs, on_driver, dead=()):
+    """The batch served as the engine chooses equals the distributed batch
+    (forced with DRIVER_MAX_POSTINGS = 0) and the oracle's live top-k;
+    ``on_driver`` says whether the engine's choice is the driver path."""
+    from data_prepper_spark.query import wand
+
+    with pytest.MonkeyPatch.context() as mp:
+        collects = []
+        blocks_frame = eng._blocks_frame
+        mp.setattr(eng, "_blocks_frame", lambda h: collects.append(h) or blocks_frame(h))
+        served = _by_query(eng.topk_batch(BATCH, BATCH_K).collect())
+        assert len(collects) == int(on_driver)
+        mp.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+        distributed = _by_query(eng.topk_batch(BATCH, BATCH_K).collect())
+        assert len(collects) == int(on_driver)
+    assert served == distributed
+    for qid, q in BATCH.items():
+        assert served[qid] == _live_oracle(corpus_docs, q, BATCH_K, dead), qid
+
+
 @pytest.mark.parametrize("q,k", SERVING)
 def test_topk_rows_driver_path(spark, index_dir, corpus_docs, q, k, monkeypatch):
     """topk_rows answers on the driver (no distributed plan) with the same
@@ -225,6 +264,16 @@ def test_topk_rows_driver_path(spark, index_dir, corpus_docs, q, k, monkeypatch)
     assert fallback == []
     assert got == eng.topk(q, k).collect()
     assert _rows(got) == _norm(oracle_topk(corpus_docs, q, k))
+    eng.close()
+
+
+def test_topk_batch_driver_path(spark, index_dir, corpus_docs):
+    """topk_batch within the driver-path bounds: one Arrow collect of the
+    batch's blocks, the same rows as the distributed batch and the oracle."""
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    eng = IndexQueryEngine(spark, index_dir)
+    _check_batch(eng, corpus_docs, on_driver=True)
     eng.close()
 
 
@@ -277,6 +326,8 @@ def test_topk_rows_layered_with_result_cache(spark, corpus_dir, corpus_docs, tmp
         assert _rows(pruned.topk_rows(q, k)) == _rows(want), q
         assert _rows(got) == _norm(oracle_topk(corpus_docs, q, k)), q
     assert fallback == []
+    _check_batch(cached, corpus_docs, on_driver=True)
+    _check_batch(pruned, corpus_docs, on_driver=True)
     cached.close()
     pruned.close()
 
@@ -305,6 +356,7 @@ def test_topk_rows_deletes(spark, corpus_dir, corpus_docs, tmp_path, monkeypatch
     for qq, k in cases:
         assert got[qq] == few.topk(qq, k).collect(), qq
         assert _rows(got[qq]) == _live_oracle(corpus_docs, qq, k, victims), qq
+    _check_batch(few, corpus_docs, on_driver=True, dead=victims)
     few.close()
 
     # more tombstones than the driver holds: ids absent from the corpus
@@ -318,6 +370,9 @@ def test_topk_rows_deletes(spark, corpus_dir, corpus_docs, tmp_path, monkeypatch
     got = many.topk_rows(q, 5)
     assert len(fallback) == 1
     assert _rows(got) == _live_oracle(corpus_docs, q, 5, victims)
+    # the anti-join carries no broadcast hint: AQE sizes the tombstone side
+    assert "ResolvedHint" not in many.topk(q, 5)._jdf.queryExecution().analyzed().toString()
+    _check_batch(many, corpus_docs, on_driver=False, dead=victims)
     many.close()
 
 
@@ -344,3 +399,54 @@ def test_topk_rows_job_structure(spark, index_dir):
     assert jobs("serving_cold", "parseJson buffer") == 2
     assert jobs("serving_rewarm", "parseJson buffer") == 1
     eng.close()
+
+
+def test_topk_batch_job_structure(spark, index_dir):
+    """A warm driver-path batch round (every term in the dictionary cache)
+    runs one Spark job, the Arrow collect of its blocks: the result frame
+    is a LocalTableScan, which collects in the driver with no job. A round
+    with uncached terms adds one dictionary job."""
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    sc = spark.sparkContext
+    eng = IndexQueryEngine(spark, index_dir)
+    warm = {"a": "the return", "b": "parseJson buffer"}
+    eng.topk_batch(warm, 10).collect()  # fills the block and dictionary caches
+
+    def jobs(group, queries):
+        sc.setJobGroup(group, group)
+        try:
+            rows = eng.topk_batch(queries, 10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("batch_warm", warm) == 1
+    assert jobs("batch_cold", {"a": "the", "b": "scanChunk emitState"}) == 2
+    assert jobs("batch_rewarm", {"a": "the", "b": "scanChunk emitState"}) == 1
+    eng.close()
+
+
+def test_driver_frames_run_no_python_worker(spark, index_dir):
+    """Rows answered in the driver come back as DataFrames over an Arrow
+    table: the driver-path batch, the result-cached topk() frame and the
+    empty results collect in the JVM, with no PythonRDD in their lineage."""
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    eng = IndexQueryEngine(spark, index_dir)
+    cached = IndexQueryEngine(spark, index_dir, result_cache_size=4)
+    frames = {
+        "batch": eng.topk_batch({"a": "the return", "b": "parseJson"}, 10),
+        "cached": cached.topk("the return", 10),
+        "empty": eng.topk("qqqqxyzw", 10),
+        "empty_batch": eng.topk_batch({"a": "qqqqxyzw"}, 10),
+        "empty_cached": cached.topk("qqqqxyzw", 10),
+    }
+    for name, df in frames.items():
+        assert "PythonRDD" not in df._jdf.rdd().toDebugString(), name
+    assert frames["cached"].collect() == eng.topk("the return", 10).collect()
+    assert frames["batch"].count() == 20
+    assert frames["empty"].collect() == frames["empty_batch"].collect() == []
+    eng.close()
+    cached.close()
