@@ -31,10 +31,11 @@ def load_stats_full(spark: SparkSession, io: TableIO) -> tuple[int, float, int]:
     by remerge=False adds since the last full merge: a layered index's
     precomputed block-max wtf bounds are stale (they embed the avgdl at
     THEIR build time), so query kernels must not prune with them — the
-    engine forces the exhaustive path while layered > 0."""
-    # both callers (WAND one-shot + IndexQueryEngine) decode block payloads
-    # next — gate on the ledger's code_version first so an index written by
-    # an incompatible build fails with "rebuild required" instead of
+    engine prunes with avgdl-independent tf-only bounds while layered > 0
+    (wand._BlockMeta)."""
+    # the caller (IndexQueryEngine) decodes block payloads next — gate on
+    # the ledger's code_version first so an index written by an
+    # incompatible build fails with "rebuild required" instead of
     # mis-decoding the codec-tag byte
     from ..index.build import check_index_compatibility
 
@@ -84,10 +85,9 @@ def dict_df(spark: SparkSession, io: TableIO):
     )
 
 
-def query_term_stats(
-    spark: SparkSession, io: TableIO, terms: list[str], n_docs: int
-) -> dict[str, dict]:
-    """{term: {df, idf, max_wtf}} for terms present in the dictionary.
+def lookup_term_stats(dictionary, terms: list[str], n_docs: int) -> dict[str, dict]:
+    """{term: {df, hash, idf, max_wtf}} for the terms present in
+    ``dictionary``, a ``dict_df`` frame: one driver collect.
 
     The dictionary scan is pruned by parquet min/max on the sorted term
     column — at design scale this touches a handful of row groups.
@@ -95,8 +95,7 @@ def query_term_stats(
     if not terms:
         return {}
     rows = (
-        dict_df(spark, io)
-        .where(F.col("term").isin(terms))
+        dictionary.where(F.col("term").isin(terms))
         .select("term", "term_hash", "df", "max_wtf")
         .collect()
     )
@@ -109,6 +108,13 @@ def query_term_stats(
         }
         for r in rows
     }
+
+
+def query_term_stats(
+    spark: SparkSession, io: TableIO, terms: list[str], n_docs: int
+) -> dict[str, dict]:
+    """``lookup_term_stats`` over the index's current logical dictionary."""
+    return lookup_term_stats(dict_df(spark, io), terms, n_docs) if terms else {}
 
 
 # tombstoned ids up to this count are held in the driver: the live-docs

@@ -1,16 +1,18 @@
 """Persistent query engine over a built index: the "search service" path.
 
-``bm25_topk_wand`` (query/wand.py) is the one-shot path — every call pays
-stats lookup + a cold scan. A real search deployment keeps the index hot:
-this engine loads ``corpus_stats`` once, opens the dictionary once, keeps a
-driver-side cache of dictionary rows for seen terms, and (optionally)
-persists the ``posting_blocks`` DataFrame so repeat queries scan executor
-memory instead of parquet. That mirrors how the reference's delegate
+A real search deployment keeps the index hot: this engine loads
+``corpus_stats`` once, opens the dictionary once, keeps a driver-side
+cache of dictionary rows for seen terms, and (optionally) persists the
+``posting_blocks`` DataFrame so repeat queries scan executor memory
+instead of parquet. That mirrors how the reference's delegate
 (OpenSearch/Lucene) serves queries from page-cached segment files.
+``wand.bm25_topk_wand`` is the one-shot form: a fresh engine over the
+unpersisted blocks per call.
 
-Serving split. The dictionary gives every query term's df before any job
-runs, so ``topk_rows`` knows a query's posting count (Σdf) up front, and
-``topk_batch`` the Σdf over the union of its queries' terms:
+One serving path. Every call is a batch — ``topk`` and ``topk_rows`` run
+a batch of one — and every batch runs ``wand.batch_topk_by_shard``. The
+dictionary gives every query term's df before any job runs, so the engine
+knows the Σdf over the union of a batch's terms up front:
 
 - at most ``wand.DRIVER_MAX_POSTINGS`` postings and at most
   ``MAX_DEAD_IDS`` tombstones: the term-filtered blocks come to the driver
@@ -19,12 +21,12 @@ runs, so ``topk_rows`` knows a query's posting count (Σdf) up front, and
   dictionary cache, two on a miss. ``topk_batch`` returns its rows as a
   DataFrame over an Arrow table, a LocalTableScan whose collect runs no
   further job;
-- above either bound: the distributed plan — shard kernels in
-  ``mapInPandas`` workers, TakeOrderedAndProject merge (a per-query
-  window rank for batches).
+- above either bound: the distributed plan (``_plan``) — shard kernels in
+  one ``mapInPandas`` closure, live-docs filter, rank per query.
 
-``topk`` is the lazy distributed plan, or with ``result_cache_size`` > 0
-the cached ``topk_rows`` answer wrapped like the batch rows.
+``topk`` is that distributed plan, or with ``result_cache_size`` > 0 the
+cached ``topk_rows`` answer wrapped like the batch rows. ``k`` = 0 is the
+empty answer (OpenSearch ``size: 0``), served with no job.
 
 At design scale the blocks table exceeds cluster RAM; ``persist_blocks``
 uses MEMORY_AND_DISK so hot terms stay resident and cold ones spill —
@@ -39,17 +41,21 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from ..analyzer import tokenize_py
 from ..tableio import TableIO
 from . import wand
 from .common import MAX_DEAD_IDS, dict_df, live_filter, load_stats_full, tombstones
-from .common import idf as _idf
+from .common import lookup_term_stats
 
 _RESULT_ROW = Row("rank", "doc_id", "score")
 _TOPK_SCHEMA = pa.schema([("rank", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())])
 _BATCH_SCHEMA = pa.schema([("query_id", pa.string()), *_TOPK_SCHEMA])
+
+# partitions of the distributed plan's blocks, hash-partitioned by shard
+SHARD_PARTITIONS = 8
 
 
 class IndexQueryEngine:
@@ -58,13 +64,11 @@ class IndexQueryEngine:
         spark: SparkSession,
         index_dir: str,
         persist_blocks: bool = True,
-        shard_partitions: int = 8,
         exhaustive_threshold: int | None = None,
         result_cache_size: int = 0,
     ):
         self.spark = spark
         self.io = TableIO(index_dir)
-        self.shard_partitions = shard_partitions
         # Opt-in result cache keyed by (query, k): a search tier's hottest
         # queries repeat, and the engine instance is pinned to one index
         # snapshot (generation resolved at construction), so cached rows
@@ -76,7 +80,7 @@ class IndexQueryEngine:
         self.n_docs, self.avgdl, self.layered = load_stats_full(spark, self.io)
         # layered (NRT) index: stored block-max wtf bounds embed a stale
         # avgdl; prune with avgdl-independent tf-only bounds instead of
-        # forcing the exhaustive kernel (see _Cursor docstring)
+        # forcing the exhaustive kernel (see wand._BlockMeta)
         self._bounds = "tf" if self.layered else "wtf"
         self._thr = (
             wand.EXHAUSTIVE_THRESHOLD if exhaustive_threshold is None else exhaustive_threshold
@@ -108,35 +112,37 @@ class IndexQueryEngine:
             # (shard, term) group is intact under any term filter). The
             # in-memory columnar cache prunes batches by term min/max, the
             # RAM analog of parquet row-group pruning.
-            self.blocks = self.blocks.repartition(shard_partitions, "shard").persist(
+            self.blocks = self.blocks.repartition(SHARD_PARTITIONS, "shard").persist(
                 StorageLevel.MEMORY_AND_DISK
             )
 
     def _term_stats(self, terms: list[str]) -> dict[str, dict]:
         missing = [t for t in terms if t not in self._dict_cache]
         if missing:
-            rows = (
-                self._dict.where(F.col("term").isin(missing))
-                .select("term", "term_hash", "df", "max_wtf")
-                .collect()
-            )
-            found = {r["term"] for r in rows}
-            for r in rows:
-                self._dict_cache[r["term"]] = {
-                    "df": int(r["df"]),
-                    "hash": int(r["term_hash"]),
-                    "idf": _idf(self.n_docs, int(r["df"])),
-                    "max_wtf": float(r["max_wtf"]) if r["max_wtf"] is not None else 0.0,
-                }
+            found = lookup_term_stats(self._dict, missing, self.n_docs)
             for t in missing:
-                if t not in found:
-                    self._dict_cache[t] = None
+                self._dict_cache[t] = found.get(t)
         return {t: s for t in terms if (s := self._dict_cache.get(t)) is not None}
 
-    def _hstats(self, query_text: str) -> dict[int, dict]:
-        """{term_hash: stats} of the query's terms found in the dictionary."""
-        tstats = self._term_stats(sorted(set(tokenize_py(query_text))))
-        return {s["hash"]: s for s in tstats.values()}
+    def _per_query(
+        self, queries: dict[str, str], k: int
+    ) -> tuple[dict[str, dict[int, dict]], dict[int, dict]]:
+        """({query_id: {term_hash: stats}}, {term_hash: stats} over the
+        union) from ONE dictionary lookup of the union of the queries'
+        terms. Every serving call starts here, so this is where ``k`` is
+        checked: negative raises, and 0 is the empty answer with no
+        lookup and no job."""
+        if k < 0:
+            raise ValueError(f"k must be >= 0, got {k}")
+        if k == 0:
+            return {}, {}
+        q_terms = {qid: sorted(set(tokenize_py(text))) for qid, text in queries.items()}
+        tstats = self._term_stats(sorted({t for ts in q_terms.values() for t in ts}))
+        per_q = {
+            qid: {tstats[t]["hash"]: tstats[t] for t in ts if t in tstats}
+            for qid, ts in q_terms.items()
+        }
+        return per_q, {s["hash"]: s for s in tstats.values()}
 
     def _local_df(self, rows: list, schema: pa.Schema) -> DataFrame:
         """Driver-side rows as a DataFrame over an Arrow table: Spark reads
@@ -147,20 +153,24 @@ class IndexQueryEngine:
         return self.spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema))
 
     def topk(self, query_text: str, k: int = 10) -> DataFrame:
-        """(rank int, doc_id long, score double) — block-max WAND per shard,
-        TakeOrderedAndProject merge. One Spark job on the warm path."""
+        """(rank int, doc_id long, score double) — the distributed plan for
+        a batch of one, or the cached ``topk_rows`` answer when the result
+        cache is on. One Spark job on the warm path."""
         if self._result_cache_size:
             return self._local_df(self.topk_rows(query_text, k), _TOPK_SCHEMA)
-        return self._topk_df(self._hstats(query_text), k)
+        per_q, union = self._per_query({"": query_text}, k)
+        if not union:
+            return self._local_df([], _TOPK_SCHEMA)
+        return self._plan(per_q, union, k).select(*_TOPK_SCHEMA.names)
 
     def topk_rows(self, query_text: str, k: int = 10) -> list:
         """Collected (rank, doc_id, score) rows — the SERVING-path API.
 
         Queries within the driver-path bounds (module docstring) run as one
         Arrow collect plus the shard kernels in the driver; the rest
-        collect the distributed ``topk`` plan. With ``result_cache_size``
-        > 0 the (query, k) cache is consulted first, and a hit runs no
-        Spark job at all.
+        collect the distributed plan. With ``result_cache_size`` > 0 the
+        (query, k) cache is consulted first, and a hit runs no Spark job
+        at all.
         """
         if not self._result_cache_size:
             return self._serve(query_text, k)
@@ -175,65 +185,43 @@ class IndexQueryEngine:
             self._result_cache.popitem(last=False)
         return rows
 
-    def _on_driver(self, hstats: dict[int, dict]) -> bool:
+    def _on_driver(self, union: dict[int, dict]) -> bool:
         """Serve on the driver: the terms' postings and the tombstones
         are within the driver-path bounds (module docstring)."""
-        postings = sum(s["df"] for s in hstats.values())
+        postings = sum(s["df"] for s in union.values())
         return postings <= wand.DRIVER_MAX_POSTINGS and self._n_tombstones <= MAX_DEAD_IDS
 
-    def _blocks_frame(self, hstats: dict[int, dict]) -> pd.DataFrame:
+    def _blocks_frame(self, union: dict[int, dict]) -> pd.DataFrame:
         """One job: cached-block scan + term filter, Arrow batches straight
         into the driver (no Python worker, no exchange, no merge stage)."""
-        return self.blocks.where(F.col("term_hash").isin(list(hstats))).toPandas()
+        return self.blocks.where(F.col("term_hash").isin(list(union))).toPandas()
 
-    def _ranked(self, hits: list[tuple[int, float]], k: int) -> list[tuple[int, int, float]]:
-        """Global top-k of one query's shard hits: dead ids dropped, then
-        (rank, doc_id, score) by score desc, doc_id asc."""
-        if self._dead_ids:
-            dead = set(self._dead_ids)
-            hits = [h for h in hits if h[0] not in dead]
-        hits.sort(key=lambda h: (-h[1], h[0]))
-        return [(i, d, s) for i, (d, s) in enumerate(hits[:k], start=1)]
+    def _driver_rows(
+        self, per_q: dict[str, dict[int, dict]], union: dict[int, dict], k: int
+    ) -> list[tuple[str, int, int, float]]:
+        """(query_id, rank, doc_id, score) rows of a batch served on the
+        driver: the batch kernels over one Arrow collect, then per query
+        dead ids dropped and the hits ranked by score desc, doc_id asc."""
+        by_q: dict[str, list[tuple[int, float]]] = {qid: [] for qid in per_q}
+        for qid, d, s in wand.batch_topk_by_shard(
+            [self._blocks_frame(union)], per_q, self.avgdl, k + self._n_tombstones,
+            self._thr, self._bounds,
+        ):
+            by_q[qid].append((d, s))
+        dead = set(self._dead_ids)
+        rows = []
+        for qid, hits in by_q.items():
+            hits = sorted((h for h in hits if h[0] not in dead), key=lambda h: (-h[1], h[0]))
+            rows.extend((qid, i, d, s) for i, (d, s) in enumerate(hits[:k], start=1))
+        return rows
 
     def _serve(self, query_text: str, k: int) -> list:
-        hstats = self._hstats(query_text)
-        if not hstats:
+        per_q, union = self._per_query({"": query_text}, k)
+        if not union:
             return []
-        if not self._on_driver(hstats):
-            return self._topk_df(hstats, k).collect()
-        hits = wand.topk_by_shard(
-            [self._blocks_frame(hstats)], hstats, self.avgdl, k + self._n_tombstones,
-            self._thr, self._bounds,
-        )
-        return [_RESULT_ROW(*r) for r in self._ranked(hits, k)]
-
-    def _topk_df(self, hstats: dict[int, dict], k: int) -> DataFrame:
-        if not hstats:
-            return self._local_df([], _TOPK_SCHEMA)
-        avgdl, n = self.avgdl, k + self._n_tombstones
-        thr, bounds = self._thr, self._bounds
-
-        def per_shard(pdfs):
-            yield wand.hits_frame(wand.topk_by_shard(pdfs, hstats, avgdl, n, thr, bounds))
-
-        filtered = self.blocks.where(F.col("term_hash").isin(list(hstats)))
-        if not self._prepartitioned:
-            filtered = filtered.repartition(self.shard_partitions, "shard")
-        local = live_filter(
-            self.spark, self.io,
-            filtered.mapInPandas(per_shard, "doc_id long, score double"),
-            (self._n_tombstones, self._dead_ids),
-        )
-        topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        from pyspark.sql.window import Window
-
-        # rank over the already-top-k rows: partitionBy(lit(0)) declares the
-        # single partition explicitly (<= k rows), silencing WindowExec's
-        # move-all-data warning without changing the plan's work
-        w = F.row_number().over(
-            Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-        )
-        return topk.select(w.alias("rank"), "doc_id", "score")
+        if not self._on_driver(union):
+            return self._plan(per_q, union, k).select(*_TOPK_SCHEMA.names).collect()
+        return [_RESULT_ROW(*r[1:]) for r in self._driver_rows(per_q, union, k)]
 
     def topk_batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Evaluate MANY queries at once: (query_id string, rank int,
@@ -244,33 +232,26 @@ class IndexQueryEngine:
         Within the driver-path bounds over that union (module docstring)
         the blocks come through one Arrow collect, the batch kernels run
         in the driver, and the rows return as a DataFrame over an Arrow
-        table. Above them each shard partition of one ``mapInPandas`` job
-        runs every query over its blocks and a window ranks the hits.
-        Either way per-query latency amortizes one job's fixed cost, the
-        way a search tier batches its request queue, and results are
-        rank-identical to per-query ``topk``.
+        table. Above them each shard partition of the distributed plan
+        runs every query over its blocks. Either way per-query latency
+        amortizes one job's fixed cost, the way a search tier batches its
+        request queue, and results are rank-identical to per-query
+        ``topk``.
         """
-        q_terms = {qid: sorted(set(tokenize_py(text))) for qid, text in queries.items()}
-        tstats = self._term_stats(sorted({t for ts in q_terms.values() for t in ts}))
-        per_q: dict[str, dict[int, dict]] = {
-            qid: {tstats[t]["hash"]: tstats[t] for t in ts if t in tstats}
-            for qid, ts in q_terms.items()
-        }
-        union = {s["hash"]: s for s in tstats.values()}
-        if not union:
-            return self._local_df([], _BATCH_SCHEMA)
+        per_q, union = self._per_query(queries, k)
+        if union and not self._on_driver(union):
+            return self._plan(per_q, union, k)
+        rows = self._driver_rows(per_q, union, k) if union else []
+        return self._local_df(rows, _BATCH_SCHEMA)
+
+    def _plan(
+        self, per_q: dict[str, dict[int, dict]], union: dict[int, dict], k: int
+    ) -> DataFrame:
+        """The distributed plan, (query_id, rank, doc_id, score): term
+        filter -> the batch kernels in one ``mapInPandas`` closure per
+        shard partition -> live-docs filter -> rank per query_id."""
         avgdl, n = self.avgdl, k + self._n_tombstones
         thr, bounds = self._thr, self._bounds
-        if self._on_driver(union):
-            by_q: dict[str, list[tuple[int, float]]] = {}
-            for qid, d, s in wand.batch_topk_by_shard(
-                [self._blocks_frame(union)], per_q, avgdl, n, thr, bounds
-            ):
-                by_q.setdefault(qid, []).append((d, s))
-            return self._local_df(
-                [(qid, *r) for qid in per_q for r in self._ranked(by_q.get(qid, []), k)],
-                _BATCH_SCHEMA,
-            )
 
         def per_shard(pdfs):
             yield wand.batch_hits_frame(
@@ -279,14 +260,12 @@ class IndexQueryEngine:
 
         filtered = self.blocks.where(F.col("term_hash").isin(list(union)))
         if not self._prepartitioned:
-            filtered = filtered.repartition(self.shard_partitions, "shard")
+            filtered = filtered.repartition(SHARD_PARTITIONS, "shard")
         local = live_filter(
             self.spark, self.io,
             filtered.mapInPandas(per_shard, "query_id string, doc_id long, score double"),
             (self._n_tombstones, self._dead_ids),
         )
-        from pyspark.sql.window import Window
-
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             local.withColumn("rank", F.row_number().over(w))

@@ -1,15 +1,10 @@
 """Block-max WAND top-k over the compressed posting_blocks table.
 
-Distributed strategy: shards are disjoint doc_id ranges (index/build.py),
-so each shard runs an independent, fully sequential block-max WAND over the
-query terms' blocks and emits a local top-k; the global answer is the merge
-(``ORDER BY score DESC, doc_id ASC LIMIT k`` = TakeOrderedAndProject). No
-cross-shard state — the only data leaving an executor is k rows per shard.
-Small queries skip the executors instead: IndexQueryEngine.topk_rows and
-topk_batch run the same per-shard loops (``topk_by_shard``,
-``batch_topk_by_shard``) in the driver over one Arrow collect of the
-query's (batch's) blocks while their postings stay within
-``DRIVER_MAX_POSTINGS``.
+Shards are disjoint doc_id ranges (index/build.py), so each shard runs an
+independent top-k over the query terms' blocks and the global answer is
+the merge of the per-shard hits: no cross-shard state. IndexQueryEngine
+(query/engine.py) runs every query through ``batch_topk_by_shard``, in
+the driver or in its one ``mapInPandas`` closure.
 
 The scan is pruned by ``term IN (...)`` pushed to parquet (blocks are
 written sorted by term within each shard partition), so a query touches
@@ -18,13 +13,12 @@ only its terms' row groups in each shard.
 Shard-local kernel lineup (dispatched by _wand_shard):
 - exhaustive: decode-everything vectorized BM25 — fastest below
   EXHAUSTIVE_THRESHOLD postings where pruning can't beat flat numpy;
-- blockmax (default above the threshold): vectorized block-granular
-  pruning over a doc-id interval partition (_blockmax_shard) — all-numpy,
-  degrades to ~exhaustive cost when score distributions leave nothing to
-  prune, and skips whole doc-id regions when they do;
-- pointer: the per-document Ding & Suel block-max WAND, kept as the
-  semantic reference and cross-check target (per-posting Python makes it
-  5-10x slower than the vectorized kernels at high df).
+- blockmax (above the threshold): vectorized block-granular pruning over
+  a doc-id interval partition (_blockmax_shard) — all-numpy, degrades to
+  ~exhaustive cost when score distributions leave nothing to prune, and
+  skips whole doc-id regions when they do.
+The per-document Ding & Suel pointer WAND is the semantic reference both
+are cross-checked against; it lives with the tests (tests/wand_pointer.py).
 
 Correctness guardrails (rank-identity vs the DataFrame path + oracle):
 - per-term upper bounds and block maxima are inflated by 1 + 1e-9 before
@@ -40,11 +34,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..analyzer import tokenize_py
-from ..tableio import TableIO
-from .common import K1, B, load_stats_full, query_term_stats
+from .common import K1, B
 from ..index.varint import decode_doc_ids_payload, decode_payload
 
 _INF = np.iinfo(np.int64).max
@@ -52,162 +43,12 @@ _EPS = 1e-12
 _UB_INFLATE = 1.0 + 1e-9
 
 
-class _Cursor:
-    """Per-(term, segment) posting cursor over that term's blocks within one
-    shard. On a merged index every (term, shard) lives in exactly one segment
-    group, so "per segment" degenerates to "per term"; on a layered (NRT)
-    index a term has one cursor per segment — block_ids restart at 0 and
-    doc_id ranges overlap across segments, so a single cursor over the union
-    would mis-sort, but independent cursors are just more posting lists and
-    WAND's pivot logic is indifferent (scores for the same doc sum across
-    cursors, and a doc exists in exactly one segment per term).
-
-    ``bounds`` picks the block upper bound used for pruning:
-    - "wtf": the stored ``block_max_wtf`` (embeds build-time avgdl) — exact
-      and tightest, valid only while corpus avgdl == build avgdl.
-    - "tf": recomputed from ``block_max_tf`` as
-      idf·(k1+1)·tf_max/(tf_max + k1·(1−b)) — avgdl-independent (wtf is
-      increasing in tf and its denominator ≥ tf + k1(1−b) for any dl,
-      avgdl), so a layered index keeps block-max pruning instead of being
-      forced into exhaustive scoring. Looser by the dl/avgdl term, exact
-      scoring at candidates unchanged.
-    """
-
-    __slots__ = (
-        "idf", "global_ub", "firsts", "lasts", "gaps", "tfs_b", "dls_b",
-        "n_in_block", "block_maxes", "bi", "docs", "tfs", "dls", "pos",
-    )
-
-    def __init__(self, idf: float, bdf: pd.DataFrame, avgdl: float, bounds: str = "wtf"):
-        b = bdf.sort_values("block_id")
-        self.idf = idf
-        self.firsts = b["first_doc_id"].to_numpy(np.int64)
-        self.n_in_block = b["n_docs"].to_numpy(np.int64)
-        self.gaps = b["doc_gaps"].tolist()
-        self.tfs_b = b["tfs"].tolist()
-        self.dls_b = b["dls"].tolist()
-        if bounds == "tf":
-            tf_max = b["block_max_tf"].to_numpy(np.float64)
-            ub = (tf_max * (K1 + 1)) / (tf_max + K1 * (1 - B))
-        else:
-            ub = b["block_max_wtf"].to_numpy(np.float64)
-        self.block_maxes = ub * idf * _UB_INFLATE
-        self.global_ub = float(self.block_maxes.max()) if len(b) else 0.0
-        # last doc_id per block = first of next block - 1 is unknown without
-        # decode; store exact last via decode-on-demand, init with next-first
-        self.lasts = np.empty(len(self.firsts), dtype=np.int64)
-        self.lasts[:-1] = self.firsts[1:] - 1  # upper bound, exact enough for skipping
-        self.lasts[-1] = _INF
-        self.bi = -1
-        self.pos = 0
-        self.docs = self.tfs = self.dls = None
-        self._load_block(0)
-
-    def _load_block(self, bi: int) -> None:
-        if bi >= len(self.firsts):
-            self.bi = len(self.firsts)
-            self.docs = np.array([_INF], dtype=np.int64)
-            self.tfs = np.array([0.0])
-            self.dls = np.array([1.0])
-            self.pos = 0
-            return
-        n = int(self.n_in_block[bi])
-        self.bi = bi
-        self.docs = decode_doc_ids_payload(int(self.firsts[bi]), self.gaps[bi], n)
-        self.tfs = decode_payload(self.tfs_b[bi], n).astype(np.float64)
-        self.dls = decode_payload(self.dls_b[bi], n).astype(np.float64)
-        self.pos = 0
-
-    @property
-    def doc(self) -> int:
-        return int(self.docs[self.pos])
-
-    def exhausted(self) -> bool:
-        return self.bi >= len(self.firsts)
-
-    def block_ub(self) -> float:
-        """idf-scaled max score of the current block."""
-        if self.exhausted():
-            return 0.0
-        return float(self.block_maxes[self.bi])
-
-    def block_last(self) -> int:
-        return _INF if self.exhausted() else int(self.lasts[self.bi])
-
-    def next_geq(self, target: int) -> None:
-        if self.exhausted():
-            return
-        if self.docs[-1] < target:
-            # jump to the block whose first <= target <= (next first - 1)
-            nbi = int(np.searchsorted(self.firsts, target, side="right"))
-            # block nbi-1 may still contain target; its decoded max is docs[-1]
-            if nbi - 1 > self.bi:
-                self._load_block(nbi - 1)
-                if self.exhausted():
-                    return
-            while self.docs[-1] < target:
-                self._load_block(self.bi + 1)
-                if self.exhausted():
-                    return
-        p = int(np.searchsorted(self.docs, target, side="left"))
-        if p >= len(self.docs):
-            self._load_block(self.bi + 1)
-        else:
-            self.pos = p
-
-    def score_current(self, avgdl: float) -> float:
-        tf = self.tfs[self.pos]
-        dl = self.dls[self.pos]
-        return self.idf * (tf * (K1 + 1)) / (tf + K1 * (1 - B + B * dl / avgdl))
-
-
 def _exhaustive_shard(
     groups: pd.DataFrame, hstats: dict[int, dict], avgdl: float, k: int
 ) -> list[tuple[int, float]]:
-    """Vectorized exhaustive BM25 over this shard's query-term blocks.
-
-    Decode every block (numpy varint), score all postings in one
-    vectorized expression, segment-sum per doc_id with add.reduceat, and
-    top-k with argpartition. No per-posting Python — for the low-df regime
-    where WAND's theta cannot prune much, this beats the pointer kernel by
-    an order of magnitude because the work is O(postings) either way and
-    here it runs at numpy speed. Produces the same (score, doc) answer as
-    the pointer kernel (asserted in tests)."""
-    doc_parts: list[np.ndarray] = []
-    score_parts: list[np.ndarray] = []
-    for th, bdf in groups.groupby("term_hash"):
-        st = hstats.get(int(th))
-        if st is None:
-            continue
-        idf = st["idf"]
-        for first, gaps, tfs_b, dls_b, n in zip(
-            bdf["first_doc_id"], bdf["doc_gaps"], bdf["tfs"], bdf["dls"], bdf["n_docs"]
-        ):
-            n = int(n)
-            docs = decode_doc_ids_payload(int(first), gaps, n)
-            tf = decode_payload(tfs_b, n).astype(np.float64)
-            dl = decode_payload(dls_b, n).astype(np.float64)
-            doc_parts.append(docs)
-            # association matches batch_exhaustive_shard: idf * (wtf)
-            score_parts.append(idf * ((tf * (K1 + 1)) / (tf + K1 * (1 - B + B * dl / avgdl))))
-    if not doc_parts:
-        return []
-    docs = np.concatenate(doc_parts)
-    scores = np.concatenate(score_parts)
-    order = np.argsort(docs, kind="stable")
-    d, s = docs[order], scores[order]
-    starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))
-    sums = np.add.reduceat(s, starts)
-    uniq = d[starts]
-    if len(sums) > k:
-        # top-k by score via argpartition, then re-include every doc tying
-        # the boundary score so the doc-asc tiebreak is exact
-        boundary = sums[np.argpartition(-sums, k - 1)[:k]].min()
-        cand = np.flatnonzero(sums >= boundary)
-        sel = cand[np.lexsort((uniq[cand], -sums[cand]))]
-    else:
-        sel = np.lexsort((uniq, -sums))
-    return [(int(uniq[i]), float(sums[i])) for i in sel[:k]]
+    """Vectorized exhaustive BM25 over this shard's query-term blocks: the
+    one-query case of ``batch_exhaustive_shard``."""
+    return [(d, s) for _q, d, s in batch_exhaustive_shard(groups, {"": hstats}, avgdl, k)]
 
 
 # below this many postings (block metadata, no decode needed) per shard the
@@ -216,11 +57,11 @@ EXHAUSTIVE_THRESHOLD = 200_000
 
 # at or below this many query postings (Σdf over the query's terms, or
 # over the union of a batch's terms, known from the dictionary before any
-# job runs) IndexQueryEngine.topk_rows and topk_batch pull the
-# term-filtered blocks through one Arrow collect and run the shard kernels
-# in the driver; above it the kernels run distributed in Python workers.
-# Set at the lowest measured crossover where both paths take equal time on
-# 4 vCPUs (NOTES.md, "Driver-side serving path").
+# job runs) IndexQueryEngine pulls the term-filtered blocks through one
+# Arrow collect and runs the shard kernels in the driver; above it the
+# kernels run distributed in Python workers. Set at the lowest measured
+# crossover where both paths take equal time on 4 vCPUs (NOTES.md,
+# "Driver-side serving path").
 DRIVER_MAX_POSTINGS = 120_000
 
 
@@ -234,34 +75,6 @@ def shard_frames(pdfs: Iterator[pd.DataFrame] | list[pd.DataFrame]) -> list[pd.D
     return [pd.concat(parts) for parts in buf.values()]
 
 
-def topk_by_shard(
-    pdfs: Iterator[pd.DataFrame] | list[pd.DataFrame],
-    hstats: dict[int, dict],
-    avgdl: float,
-    k: int,
-    exhaustive_threshold: int,
-    bounds: str,
-) -> list[tuple[int, float]]:
-    """Shard-local top-k for every shard in a stream of block frames:
-    (doc_id, score) hits, k per shard, in no global order. The one kernel
-    loop behind the mapInPandas closures and the engine's driver-side
-    path."""
-    hits: list[tuple[int, float]] = []
-    for shard_df in shard_frames(pdfs):
-        hits.extend(_wand_shard(shard_df, hstats, avgdl, k, exhaustive_threshold, bounds))
-    return hits
-
-
-def hits_frame(hits: list[tuple[int, float]]) -> pd.DataFrame:
-    """(doc_id long, score double) frame of kernel hits for mapInPandas."""
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series([d for d, _ in hits], dtype="int64"),
-            "score": pd.Series([s for _, s in hits], dtype="float64"),
-        }
-    )
-
-
 def batch_topk_by_shard(
     pdfs: Iterator[pd.DataFrame] | list[pd.DataFrame],
     per_q: dict[str, dict[int, dict]],
@@ -272,10 +85,10 @@ def batch_topk_by_shard(
 ) -> list[tuple[str, int, float]]:
     """Shard-local top-k of every query in a batch, for every shard in a
     stream of block frames: (query_id, doc_id, score) hits, k per (shard,
-    query), in no global order. The batch twin of ``topk_by_shard``,
-    behind the engine's ``topk_batch`` closure and its driver-side path.
-    A shard within the exhaustive threshold decodes each term's blocks
-    once for all queries (``batch_exhaustive_shard``)."""
+    query), in no global order. The one kernel loop behind the engine's
+    ``mapInPandas`` closure and its driver-side path; a single query runs
+    as a batch of one. A shard within the exhaustive threshold decodes
+    each term's blocks once for all queries (``batch_exhaustive_shard``)."""
     hits: list[tuple[str, int, float]] = []
     for shard_df in shard_frames(pdfs):
         if int(shard_df["n_docs"].sum()) <= exhaustive_threshold:
@@ -306,14 +119,18 @@ def batch_hits_frame(hits: list[tuple[str, int, float]]) -> pd.DataFrame:
 def _topk_from_arrays(
     docs: np.ndarray, scores: np.ndarray, k: int
 ) -> list[tuple[int, float]]:
-    """Segment-sum per doc + exact top-k (score desc, doc asc) — the shared
-    tail of the exhaustive kernels."""
+    """Segment-sum per doc + exact top-k (score desc, doc asc): the tail of
+    the exhaustive kernel. No per-posting Python — in the low-df regime
+    where theta cannot prune much the work is O(postings) either way, and
+    here it runs at numpy speed."""
     order = np.argsort(docs, kind="stable")
     d, s = docs[order], scores[order]
     starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))
     sums = np.add.reduceat(s, starts)
     uniq = d[starts]
     if len(sums) > k:
+        # top-k by score via argpartition, then re-include every doc tying
+        # the boundary score so the doc-asc tiebreak is exact
         boundary = sums[np.argpartition(-sums, k - 1)[:k]].min()
         cand = np.flatnonzero(sums >= boundary)
         sel = cand[np.lexsort((uniq[cand], -sums[cand]))]
@@ -374,9 +191,20 @@ def batch_exhaustive_shard(
 
 class _BlockMeta:
     """Per-(term, segment) block metadata WITHOUT payload decode: the
-    block-granular view the vectorized kernel plans over. Same bounds
-    semantics as _Cursor (wtf = stored build-time bound, tf = avgdl-
-    independent recomputation for layered indexes)."""
+    block-granular view the vectorized kernel plans over. A layered (NRT)
+    index has one meta per (term, segment): block_ids restart at 0 and
+    doc_id ranges overlap across segments.
+
+    ``bounds`` picks the block upper bound used for pruning:
+    - "wtf": the stored ``block_max_wtf`` (embeds build-time avgdl) — exact
+      and tightest, valid only while corpus avgdl == build avgdl.
+    - "tf": recomputed from ``block_max_tf`` as
+      idf·(k1+1)·tf_max/(tf_max + k1·(1−b)) — avgdl-independent (wtf is
+      increasing in tf and its denominator ≥ tf + k1(1−b) for any dl,
+      avgdl), so a layered index keeps block-max pruning instead of being
+      forced into exhaustive scoring. Looser by the dl/avgdl term, exact
+      scoring at candidates unchanged.
+    """
 
     __slots__ = ("idf", "firsts", "lasts", "ubs", "gaps", "tfs_b", "dls_b", "n_in_block")
 
@@ -424,8 +252,8 @@ def _blockmax_shard(
     """Vectorized block-max top-k: exact BM25 scores, block-granular
     pruning, no per-document Python.
 
-    The per-document pointer WAND (kept below as ``_wand_shard_pointer``
-    for cross-checks) pays interpreted-Python cost per posting advance —
+    The per-document pointer WAND (the cross-check reference in
+    tests/wand_pointer.py) pays interpreted-Python cost per posting advance —
     exactly where high-df queries live. This kernel works at BLOCK
     granularity instead:
 
@@ -560,176 +388,29 @@ def _blockmax_shard(
     return [(int(run_docs[i]), float(run_scores[i])) for i in sel]
 
 
-
 def _wand_shard(
     groups: pd.DataFrame,
     hstats: dict[int, dict],
     avgdl: float,
     k: int,
-    exhaustive_threshold: int | None = None,
+    exhaustive_threshold: int,
     bounds: str = "wtf",
-    kernel: str = "blockmax",
 ) -> list[tuple[int, float]]:
     """Shard-local top-k dispatch: small posting sets take the exhaustive
     kernel (theta can't prune enough to beat flat numpy); large ones take
-    the vectorized block-max kernel. ``kernel='pointer'`` selects the
-    per-document WAND (cross-check / reference implementation)."""
-    # callers capture the threshold DRIVER-side and pass it through the
-    # closure: executor workers re-import this module, so a patched module
-    # global would silently not reach them
-    thr = EXHAUSTIVE_THRESHOLD if exhaustive_threshold is None else exhaustive_threshold
-    if int(groups["n_docs"].sum()) <= thr:
+    the vectorized block-max kernel. The threshold is an argument, captured
+    driver-side: executor workers re-import this module, so a patched
+    module global would silently not reach them."""
+    if int(groups["n_docs"].sum()) <= exhaustive_threshold:
         return _exhaustive_shard(groups, hstats, avgdl, k)
-    if kernel == "blockmax":
-        return _blockmax_shard(groups, hstats, avgdl, k, bounds)
-    return _wand_shard_pointer(groups, hstats, avgdl, k, bounds)
-
-
-def _wand_shard_pointer(
-    groups: pd.DataFrame,
-    hstats: dict[int, dict],
-    avgdl: float,
-    k: int,
-    bounds: str = "wtf",
-) -> list[tuple[int, float]]:
-    """Per-document block-max WAND (Ding & Suel) — the classic pointer
-    kernel. Retained as the semantic reference for the vectorized
-    block-max kernel (rank-identity asserted in tests) and for A/B
-    benchmarking; the serving path uses _blockmax_shard."""
-    # one cursor per (term, segment): the `group` partition column is the
-    # segment id; see _Cursor docstring for why layered segments must not
-    # share a cursor
-    if "group" in groups.columns:
-        key_iter = (
-            (th, bdf) for (th, _g), bdf in groups.groupby(["term_hash", "group"])
-        )
-    else:
-        key_iter = groups.groupby("term_hash")
-    cursors = []
-    for th, bdf in key_iter:
-        st = hstats.get(int(th))
-        if st is not None:
-            cursors.append(_Cursor(st["idf"], bdf, avgdl, bounds))
-    cursors = [c for c in cursors if not c.exhausted()]
-    # top-k kept as (score, -doc_id) min-heap semantics via sorted list; k is
-    # small (<=100) so an insort is cheaper than heap bookkeeping in Python.
-    import bisect
-
-    top: list[tuple[float, int]] = []  # (score, -doc_id), ascending
-
-    def theta() -> float:
-        return top[0][0] if len(top) >= k else -1.0
-
-    while cursors:
-        cursors.sort(key=lambda c: c.doc)
-        while cursors and cursors[-1].exhausted():
-            cursors.pop()
-        if not cursors:
-            break
-        th = theta()
-        acc = 0.0
-        pivot = -1
-        for i, c in enumerate(cursors):
-            acc += c.global_ub
-            if acc > th - _EPS:
-                pivot = i
-                break
-        if pivot < 0:
-            break  # even all terms together cannot beat theta
-        pivot_doc = cursors[pivot].doc
-        if pivot_doc == _INF:
-            break
-        # extend the pivot over every cursor tied on pivot_doc: their
-        # blocks also bound pivot_doc's score, and excluding them let the
-        # safe-skip advance prefix cursors past a doc that suffix cursors
-        # would later score WITHOUT the skipped contributions (partial
-        # score) — the classic WAND pivot-tie detail
-        while pivot + 1 < len(cursors) and cursors[pivot + 1].doc == pivot_doc:
-            pivot += 1
-        if cursors[0].doc == pivot_doc:
-            # aligned: cursors[0..pivot] all sit exactly on pivot_doc, so
-            # their current blocks contain it — block-max refinement first
-            bm = sum(c.block_ub() for c in cursors[: pivot + 1])
-            if bm > th - _EPS:
-                score = 0.0
-                matched = []
-                for c in cursors:
-                    if not c.exhausted() and c.doc == pivot_doc:
-                        score += c.score_current(avgdl)
-                        matched.append(c)
-                if score > th - _EPS:
-                    key = (score, -pivot_doc)
-                    if len(top) < k:
-                        bisect.insort(top, key)
-                    elif key > top[0]:
-                        top.pop(0)
-                        bisect.insort(top, key)
-                for c in matched:
-                    c.next_geq(pivot_doc + 1)
-            else:
-                # safe skip: within [pivot_doc, d') only cursors[0..pivot]
-                # can match, and their block maxes sum <= theta
-                d_next = min(c.block_last() for c in cursors[: pivot + 1]) + 1
-                if pivot + 1 < len(cursors):
-                    d_next = min(d_next, cursors[pivot + 1].doc)
-                d_next = max(d_next, pivot_doc + 1)
-                for c in cursors[: pivot + 1]:
-                    if c.doc < d_next:
-                        c.next_geq(d_next)
-        else:
-            # not aligned: advance the smallest cursor up to the pivot doc
-            cursors[0].next_geq(pivot_doc)
-    return [(-negdoc, score) for score, negdoc in sorted(top, reverse=True)]
+    return _blockmax_shard(groups, hstats, avgdl, k, bounds)
 
 
 def bm25_topk_wand(
-    spark: SparkSession,
-    index_dir: str,
-    query_text: str,
-    k: int = 10,
-    exhaustive_threshold: int | None = None,
+    spark: SparkSession, index_dir: str, query_text: str, k: int = 10
 ) -> DataFrame:
-    """Returns (rank int, doc_id long, score double) via block-max WAND."""
-    io = TableIO(index_dir)
-    n_docs, avgdl, layered = load_stats_full(spark, io)
-    terms = sorted(set(tokenize_py(query_text)))
-    tstats = query_term_stats(spark, io, terms, n_docs)
-    empty = "rank int, doc_id long, score double"
-    if not tstats:
-        return spark.createDataFrame([], empty)
-    hstats = {s["hash"]: s for s in tstats.values()}
-    blocks = io.read(spark, "posting_blocks").where(
-        F.col("term_hash").isin(list(hstats))
-    )
+    """Returns (rank int, doc_id long, score double) via block-max WAND: a
+    one-shot ``IndexQueryEngine.topk`` over the unpersisted blocks."""
+    from .engine import IndexQueryEngine  # engine imports this module
 
-    # layered index: stored wtf bounds embed a stale avgdl -> prune with the
-    # avgdl-independent tf-only bounds instead (per-segment cursors); the
-    # pointer kernel keeps working, no forced exhaustive scan
-    bounds = "tf" if layered else "wtf"
-    thr = EXHAUSTIVE_THRESHOLD if exhaustive_threshold is None else exhaustive_threshold
-    # live-docs: widen the per-shard kernel top-k by the tombstone count
-    # so the post-filter global top-k stays exact (refresh purges the
-    # postings but keeps the tombstones, so the widening stays)
-    from .common import live_filter, tombstones
-
-    dead = tombstones(spark, io)
-    kk = k + dead[0]
-
-    def per_shard(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # mapInPandas over shard-partitioned scan: each incoming batch holds
-        # one shard's term-blocks (we repartition by shard below)
-        yield hits_frame(topk_by_shard(pdfs, hstats, avgdl, kk, thr, bounds))
-
-    local = live_filter(
-        spark, io,
-        blocks.repartition("shard").mapInPandas(per_shard, "doc_id long, score double"),
-        dead,
-    )
-    topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    from pyspark.sql.window import Window
-
-    # rank over the already-top-k rows: partitionBy(lit(0)) declares the
-    # single partition explicitly (<= k rows), silencing WindowExec's
-    # move-all-data warning without changing the plan's work
-    w = F.row_number().over(Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id")))
-    return topk.select(w.alias("rank"), "doc_id", "score")
+    return IndexQueryEngine(spark, index_dir, persist_blocks=False).topk(query_text, k)

@@ -145,9 +145,9 @@ def test_streaming_index_updates(spark, corpus_dir, tmp_path):
 
 
 def test_layered_pointer_kernel_rank_identity(spark, corpus_dir, tmp_path):
-    """A layered (NRT) index must keep block-max pruning: the POINTER kernel
-    (forced via exhaustive_threshold=0) over per-segment cursors with
-    avgdl-independent tf-only bounds must be rank-identical to the clean
+    """A layered (NRT) index must keep block-max pruning: the block-max
+    kernel (forced via exhaustive_threshold=0) over per-segment block lists
+    with avgdl-independent tf-only bounds must be rank-identical to the clean
     merged build — the Lucene-NRT 'segments stay fully searchable' economics
     instead of a forced exhaustive scan."""
     s1, s2, full = _split_corpus(corpus_dir, tmp_path)
@@ -156,7 +156,7 @@ def test_layered_pointer_kernel_rank_identity(spark, corpus_dir, tmp_path):
     build_index(spark, s1, idx, n_shards=8, units=1, shard_groups=2)
     add_to_index(spark, s2, idx, n_shards=8, units=1, remerge=False)
     build_index(spark, full, clean, n_shards=8, units=2, shard_groups=2)
-    # exhaustive_threshold=0 forces the pointer (pruning) kernel everywhere
+    # exhaustive_threshold=0 forces the block-max (pruning) kernel everywhere
     el = IndexQueryEngine(spark, idx, persist_blocks=False, exhaustive_threshold=0)
     ec = IndexQueryEngine(spark, clean, persist_blocks=False, exhaustive_threshold=0)
     ex = IndexQueryEngine(spark, idx, persist_blocks=False)  # exhaustive path
@@ -375,7 +375,7 @@ def test_streaming_layered_nrt(spark, corpus_dir, tmp_path):
     for qtext in ("def return value", "the", "class import"):
         want = [(r.rank, r.doc_id, round(r.score, 9)) for r in ec.topk(qtext, 10).collect()]
         assert [(r.rank, r.doc_id, round(r.score, 9)) for r in en.topk(qtext, 10).collect()] == want
-        # pointer kernel (tf bounds, per-segment cursors) agrees on ranks
+        # block-max kernel (tf bounds, per-segment block lists) agrees on ranks
         got_p = [(r.rank, r.doc_id) for r in ep.topk(qtext, 10).collect()]
         assert got_p == [(r_, d) for r_, d, _ in want], qtext
     # compaction: bit-identical canonical blocks

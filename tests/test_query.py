@@ -9,6 +9,7 @@ from data_prepper_spark.index.build import build_index
 from data_prepper_spark.query.bm25 import bm25_topk
 from data_prepper_spark.query.wand import bm25_topk_wand
 from tests.oracle import bm25_topk as oracle_topk
+from tests.wand_pointer import wand_shard_pointer
 
 # query shapes from FIXTURES.md §2: rare term, hot term, hot+rare
 # conjunction, identifier-split, absent term, lang keyword; k in {1,10,100}
@@ -69,9 +70,9 @@ def test_duckdb_df_dl_crosscheck(spark, corpus_dir, index_dir):
 
 @pytest.mark.parametrize("q,k", [("the", 10), ("parse json response", 10), ("return", 100), ("the int return i", 10)])
 def test_pointer_wand_equals_exhaustive(spark, index_dir, corpus_docs, q, k, monkeypatch):
-    """The pointer (block-max pruning) kernel and the vectorized exhaustive
-    kernel must return identical answers; the threshold only picks which
-    one runs. Forces the pointer path by zeroing the threshold."""
+    """The block-max (pruning) kernel and the vectorized exhaustive kernel
+    must return identical answers; the threshold only picks which one
+    runs. Forces the block-max path with a negative threshold."""
     from data_prepper_spark.query import wand as wand_mod
 
     fast = _norm(
@@ -83,6 +84,65 @@ def test_pointer_wand_equals_exhaustive(spark, index_dir, corpus_docs, q, k, mon
     )
     want = _norm(oracle_topk(corpus_docs, q, k))
     assert fast == want and slow == want
+
+
+def test_blockmax_kernel_three_way_identity(spark, index_dir, corpus_docs):
+    """The vectorized block-max kernel must be rank/score-identical to the
+    exhaustive kernel AND the per-document pointer WAND on every shard,
+    and the merged answer must match the oracle."""
+    from data_prepper_spark.analyzer import tokenize_py
+    from data_prepper_spark.query import wand as W
+    from data_prepper_spark.query.common import load_stats_full, query_term_stats
+    from data_prepper_spark.tableio import TableIO
+
+    io = TableIO(index_dir)
+    n_docs, avgdl, _layered = load_stats_full(spark, io)
+    pdf = io.read(spark, "posting_blocks").toPandas()
+    for q, k in [("the", 10), ("parse json response", 10), ("the int return i", 25), ("def", 100)]:
+        terms = sorted(set(tokenize_py(q)))
+        tstats = query_term_stats(spark, io, terms, n_docs)
+        hstats = {s["hash"]: s for s in tstats.values()}
+        merged = []
+        for _s, sub in pdf.groupby("shard"):
+            ex = W._wand_shard(sub, hstats, avgdl, k, 10**12, "wtf")
+            bm = W._wand_shard(sub, hstats, avgdl, k, 0, "wtf")
+            pt = wand_shard_pointer(sub, hstats, avgdl, k, "wtf")
+            norm = lambda hits: [(d, round(s, 9)) for d, s in hits]
+            assert norm(bm) == norm(ex), (q, k, "blockmax vs exhaustive")
+            assert norm(pt) == norm(ex), (q, k, "pointer vs exhaustive")
+            merged.extend(bm)
+        merged.sort(key=lambda t: (-t[1], t[0]))
+        want = oracle_topk(corpus_docs, q, k)
+        assert [(d, round(s, 6)) for d, s in merged[:k]] == [
+            (d, round(s, 6)) for _r, d, s in want
+        ], (q, k)
+
+
+def test_kernels_identical_on_many_segment_shard(spark, index_dir, corpus_docs):
+    """Regression: pivot-tied cursors (several segments' lists sitting on
+    the same doc) once let the pointer kernel's safe-skip advance prefix
+    cursors past a doc that suffix cursors later scored without them —
+    partial scores. Remap every shard to a segment of ONE logical shard
+    (the layered-index shape, maximal tie density) and require three-way
+    kernel identity."""
+    from data_prepper_spark.analyzer import tokenize_py
+    from data_prepper_spark.query import wand as W
+    from data_prepper_spark.query.common import load_stats_full, query_term_stats
+    from data_prepper_spark.tableio import TableIO
+
+    io = TableIO(index_dir)
+    n_docs, avgdl, _ = load_stats_full(spark, io)
+    pdf = io.read(spark, "posting_blocks").toPandas()
+    one = pdf.copy()
+    one["group"] = one["shard"]
+    one["shard"] = 0
+    for q, k in [("the", 10), ("def return value", 10), ("the int return i", 50)]:
+        tstats = query_term_stats(spark, io, sorted(set(tokenize_py(q))), n_docs)
+        hstats = {s["hash"]: s for s in tstats.values()}
+        norm = lambda hits: [(d, round(s, 9)) for d, s in hits]
+        ex = norm(W._exhaustive_shard(one, hstats, avgdl, k))
+        assert norm(W._blockmax_shard(one, hstats, avgdl, k, "wtf")) == ex, (q, k)
+        assert norm(wand_shard_pointer(one, hstats, avgdl, k, "wtf")) == ex, (q, k)
 
 
 def test_batch_equals_per_query(spark, index_dir, monkeypatch):
@@ -196,13 +256,13 @@ def _rows(rows):
 def _spy_fallback(monkeypatch, eng):
     """Count calls into the distributed plan (the topk_rows fallback)."""
     calls = []
-    plan = eng._topk_df
+    plan = eng._plan
 
-    def spy(hstats, k):
+    def spy(per_q, union, k):
         calls.append(k)
-        return plan(hstats, k)
+        return plan(per_q, union, k)
 
-    monkeypatch.setattr(eng, "_topk_df", spy)
+    monkeypatch.setattr(eng, "_plan", spy)
     return calls
 
 
@@ -450,3 +510,31 @@ def test_driver_frames_run_no_python_worker(spark, index_dir):
     assert frames["empty"].collect() == frames["empty_batch"].collect() == []
     eng.close()
     cached.close()
+
+
+def test_k_zero_is_empty_and_negative_k_raises(spark, index_dir):
+    """k = 0 (OpenSearch ``size: 0``) returns no rows from every serving
+    entry point, and topk_rows answers it with no Spark job; k < 0 raises."""
+    from data_prepper_spark.query.dsl import search
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    sc = spark.sparkContext
+    eng = IndexQueryEngine(spark, index_dir)
+    sc.setJobGroup("k_zero", "k_zero")
+    try:
+        assert eng.topk_rows("def", 0) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("k_zero")) == 0
+    calls = {
+        "topk_rows": lambda k: eng.topk_rows("def", k),
+        "topk": lambda k: eng.topk("def", k).collect(),
+        "topk_batch": lambda k: eng.topk_batch({"a": "def", "b": "the return"}, k).collect(),
+        "bm25_topk_wand": lambda k: bm25_topk_wand(spark, index_dir, "def", k).collect(),
+    }
+    for name, call in calls.items():
+        assert call(0) == [], name
+        with pytest.raises(ValueError):
+            call(-1)
+    assert search(spark, index_dir, {"match": {"content": "def"}}, size=0).collect() == []
+    eng.close()

@@ -216,67 +216,6 @@ def test_gc_retention_keeps_pinned_reader_generation(spark, corpus_dir, tmp_path
     assert os.path.isdir(os.path.join(idx, "posting_blocks"))
 
 
-# -------------------------------------------------- blockmax wand kernel --
-def test_blockmax_kernel_three_way_identity(spark, index_dir, corpus_docs):
-    """The vectorized block-max kernel must be rank/score-identical to the
-    exhaustive kernel AND the per-document pointer WAND on every shard,
-    and the merged answer must match the oracle."""
-    from data_prepper_spark.analyzer import tokenize_py
-    from data_prepper_spark.query import wand as W
-    from data_prepper_spark.query.common import load_stats_full, query_term_stats
-    from data_prepper_spark.tableio import TableIO
-    from tests.oracle import bm25_topk as oracle_topk
-
-    io = TableIO(index_dir)
-    n_docs, avgdl, _layered = load_stats_full(spark, io)
-    pdf = io.read(spark, "posting_blocks").toPandas()
-    for q, k in [("the", 10), ("parse json response", 10), ("the int return i", 25), ("def", 100)]:
-        terms = sorted(set(tokenize_py(q)))
-        tstats = query_term_stats(spark, io, terms, n_docs)
-        hstats = {s["hash"]: s for s in tstats.values()}
-        merged = []
-        for _s, sub in pdf.groupby("shard"):
-            ex = W._wand_shard(sub, hstats, avgdl, k, 10**12, "wtf")
-            bm = W._wand_shard(sub, hstats, avgdl, k, 0, "wtf", "blockmax")
-            pt = W._wand_shard(sub, hstats, avgdl, k, 0, "wtf", "pointer")
-            norm = lambda hits: [(d, round(s, 9)) for d, s in hits]
-            assert norm(bm) == norm(ex), (q, k, "blockmax vs exhaustive")
-            assert norm(pt) == norm(ex), (q, k, "pointer vs exhaustive")
-            merged.extend(bm)
-        merged.sort(key=lambda t: (-t[1], t[0]))
-        want = oracle_topk(corpus_docs, q, k)
-        assert [(d, round(s, 6)) for d, s in merged[:k]] == [
-            (d, round(s, 6)) for _r, d, s in want
-        ], (q, k)
-
-
-def test_kernels_identical_on_many_segment_shard(spark, index_dir, corpus_docs):
-    """Regression: pivot-tied cursors (several segments' lists sitting on
-    the same doc) once let the pointer kernel's safe-skip advance prefix
-    cursors past a doc that suffix cursors later scored without them —
-    partial scores. Remap every shard to a segment of ONE logical shard
-    (the layered-index shape, maximal tie density) and require three-way
-    kernel identity."""
-    from data_prepper_spark.analyzer import tokenize_py
-    from data_prepper_spark.query import wand as W
-    from data_prepper_spark.query.common import load_stats_full, query_term_stats
-    from data_prepper_spark.tableio import TableIO
-
-    io = TableIO(index_dir)
-    n_docs, avgdl, _ = load_stats_full(spark, io)
-    pdf = io.read(spark, "posting_blocks").toPandas()
-    one = pdf.copy()
-    one["group"] = one["shard"]
-    one["shard"] = 0
-    for q, k in [("the", 10), ("def return value", 10), ("the int return i", 50)]:
-        tstats = query_term_stats(spark, io, sorted(set(tokenize_py(q))), n_docs)
-        hstats = {s["hash"]: s for s in tstats.values()}
-        norm = lambda hits: [(d, round(s, 9)) for d, s in hits]
-        ex = norm(W._exhaustive_shard(one, hstats, avgdl, k))
-        assert norm(W._blockmax_shard(one, hstats, avgdl, k, "wtf")) == ex, (q, k)
-        assert norm(W._wand_shard_pointer(one, hstats, avgdl, k, "wtf")) == ex, (q, k)
-
-
 # ------------------------------------------------------- dsl fast routing --
 def test_dsl_single_leaf_routes_to_block_index(spark, index_dir):
     """A bare match compiles to the block-max WAND operator: the plan
