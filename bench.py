@@ -152,8 +152,8 @@ def main() -> None:
         eng.close()
 
     # ---- warm-path WAND query latency over the built index.
-    # Interleaved best-of-K (the scripts/query_ab_probe.py discipline,
-    # folded in per VERDICT r4 #1): one warmup sweep, then K measured
+    # Interleaved best-of-K (folded in per VERDICT r4 #1; A/B comparisons
+    # between commits use perfbench's protocol): one warmup sweep, then K measured
     # sweeps over the whole query set (interleaving spreads any host-noise
     # phase across all queries instead of concentrating it on one), and
     # each query keeps its per-sweep MINIMUM — the engine's time, not the

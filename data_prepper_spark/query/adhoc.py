@@ -5,7 +5,7 @@ broadcast per-term df + broadcast corpus stats -> score -> top-k. No
 driver-side collect happens until the caller acts, so the whole query is
 a single action (Spark runs the two tiny broadcast jobs as part of it).
 Used by the driver-contract queries over the ``documents`` table and by
-``entry()``. The persisted-index paths (query/bm25.py, query/wand.py)
+``entry()``. The persisted-index paths (query/engine.py, query/wand.py)
 are the scale path; this is the "query a table I haven't indexed yet"
 path, still fully JVM-side.
 """
@@ -14,11 +14,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..analyzer import tokenize_py, tokens_col
 from ..util import spread
-from .common import B, K1
+from .common import B, K1, rank_top
 
 
 def bm25_topk_adhoc(
@@ -70,9 +69,4 @@ def bm25_topk_adhoc(
     if doc_filter:
         allowed = df.where(doc_filter).select(F.col(id_col).cast("long").alias("doc_id"))
         agg = agg.join(allowed, "doc_id", "left_semi")
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    # rank over the already-top-k rows: partitionBy(lit(0)) declares the
-    # single partition explicitly (<= k rows), silencing WindowExec's
-    # move-all-data warning without changing the plan's work
-    w = F.row_number().over(Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id")))
-    return topk.select(w.alias("rank"), "doc_id", "score")
+    return rank_top(agg, k)

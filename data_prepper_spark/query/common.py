@@ -1,11 +1,14 @@
-"""Shared query-path helpers: stats/dictionary lookups, idf."""
+"""Shared query-path helpers: stats/dictionary lookups, idf, the one
+postings aggregate (``score_terms``) and the one ranking tail
+(``rank_top``)."""
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..tableio import TableIO
 
@@ -19,6 +22,46 @@ DICT_SCHEMA = "term_hash long, term string, df long, cf long, max_wtf double"
 
 def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def score_expr(idf_col, tf_col, dl_col, avgdl: float):
+    return idf_col * (tf_col * (K1 + 1)) / (tf_col + K1 * (1 - B + B * dl_col / avgdl))
+
+
+def score_terms(postings_df: DataFrame, tstats: dict[str, dict], avgdl: float) -> DataFrame:
+    """Full (doc_id, score) bool-OR BM25 aggregate of the ``tstats`` terms
+    over a (term, doc_id, tf, doc_len) postings frame: term-pruned scan ->
+    broadcast idf join -> score expression -> sum per doc. Bool
+    composition and filters need this whole set before truncation; top-k
+    alone goes through ``IndexQueryEngine``. No live-docs filter: the
+    caller owns the index (``live_filter``)."""
+    idf_df = postings_df.sparkSession.createDataFrame(
+        [(t, s["idf"]) for t, s in tstats.items()], "term string, idf double"
+    )
+    return (
+        postings_df.where(F.col("term").isin(list(tstats)))
+        .join(F.broadcast(idf_df), "term")
+        .select(
+            "doc_id",
+            score_expr(F.col("idf"), F.col("tf"), F.col("doc_len"), avgdl).alias("s"),
+        )
+        .groupBy("doc_id")
+        .agg(F.sum("s").alias("score"))
+    )
+
+
+def rank_top(df: DataFrame, k: int, *extra_cols: str) -> DataFrame:
+    """(rank, doc_id, score, *extra_cols): the top ``k`` rows of a
+    (doc_id, score, ...) frame by score desc, doc_id asc, rank 1-based.
+    ``k`` = 0 is the empty answer; negative raises like the engine."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    order = (F.desc("score"), F.asc("doc_id"))
+    # rank over the already-top-k rows: partitionBy(lit(0)) declares the
+    # single partition explicitly (<= k rows), silencing WindowExec's
+    # move-all-data warning without changing the plan's work
+    w = F.row_number().over(Window.partitionBy(F.lit(0)).orderBy(*order))
+    return df.orderBy(*order).limit(k).select(w.alias("rank"), "doc_id", "score", *extra_cols)
 
 
 def load_stats(spark: SparkSession, io: TableIO) -> tuple[int, float]:

@@ -56,9 +56,8 @@ from pyspark.sql.window import Window
 
 from ..analyzer import tokenize_py
 from ..tableio import TableIO
-from .bm25 import score_expr
-from .common import load_stats, query_term_stats
-from .multiterm import _expand_terms
+from .common import live_filter, load_stats, query_term_stats, rank_top, score_expr, score_terms
+from .multiterm import MAX_EXPANSIONS, _expand_terms, term_pred
 
 
 def _leaf_body(clause: dict) -> tuple[str, Any]:
@@ -118,8 +117,6 @@ class _Compiler:
         # match_all, and search-body attribute join (Lucene delete
         # semantics; index/build.delete_docs). Scoring leaves filter in
         # _score_terms / their own engines.
-        from .common import live_filter
-
         return live_filter(self.spark, self.io, self.io.read(self.spark, "docs"))
 
     def _has_positions(self) -> bool:
@@ -146,25 +143,7 @@ class _Compiler:
         tstats = self._term_stats(sorted(set(terms)))
         if not tstats:
             return None
-        idf_df = self.spark.createDataFrame(
-            [(t, s["idf"]) for t, s in tstats.items()], "term string, idf double"
-        )
-        posts = self._postings_df().where(
-            F.col("term").isin(list(tstats))
-        )
-        scored = (
-            posts.join(F.broadcast(idf_df), "term")
-            .select(
-                "doc_id",
-                score_expr(
-                    F.col("idf"), F.col("tf"), F.col("doc_len"), self.avgdl
-                ).alias("s"),
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("s").alias("score"))
-        )
-        from .common import live_filter
-
+        scored = score_terms(self._postings_df(), tstats, self.avgdl)
         return live_filter(self.spark, self.io, scored)
 
     def _score_leaf(self, kind: str, body: Any) -> DataFrame | None:
@@ -217,40 +196,12 @@ class _Compiler:
                     "score"
                 ),
             )
-        if kind == "prefix":
-            field, spec = _leaf_body(body)
-            self._require_content(field, kind)
-            prefix = spec["value"] if isinstance(spec, dict) else spec
-            terms = self._expand(F.col("term").startswith(prefix), 128)
-            return self._score_terms(terms) if terms else None
-        if kind == "wildcard":
-            from .multiterm import _wildcard_regex
-
-            field, spec = _leaf_body(body)
-            self._require_content(field, kind)
-            pattern = spec["value"] if isinstance(spec, dict) else spec
-            pred = F.col("term").rlike(_wildcard_regex(pattern))
-            lit_prefix = pattern.split("*")[0].split("?")[0]
-            if lit_prefix:
-                pred = F.col("term").startswith(lit_prefix) & pred
-            terms = self._expand(pred, 128)
-            return self._score_terms(terms) if terms else None
-        if kind == "regexp":
-            field, spec = _leaf_body(body)
-            self._require_content(field, kind)
-            rx = spec["value"] if isinstance(spec, dict) else spec
-            anchored = rx if rx.startswith("^") else f"^(?:{rx})$"
-            terms = self._expand(F.col("term").rlike(anchored), 128)
-            return self._score_terms(terms) if terms else None
-        if kind == "fuzzy":
+        if kind in MAX_EXPANSIONS:  # prefix / wildcard / regexp / fuzzy
             field, spec = _leaf_body(body)
             self._require_content(field, kind)
             value = spec["value"] if isinstance(spec, dict) else spec
             max_edits = int(spec.get("fuzziness", 1)) if isinstance(spec, dict) else 1
-            pred = F.col("term").startswith(value[:1]) & (
-                F.levenshtein(F.col("term"), F.lit(value)) <= max_edits
-            )
-            terms = self._expand(pred, 64)
+            terms = self._expand(term_pred(kind, value, max_edits), MAX_EXPANSIONS[kind])
             return self._score_terms(terms) if terms else None
         if kind == "more_like_this":
             # {"more_like_this": {"fields": ["content"], "like": {"_id": n}
@@ -673,13 +624,7 @@ def search_adhoc(
     full = _AdhocCompiler(df, text_col, id_col).compile(dsl)
     if round_to is not None:
         full = full.select("doc_id", F.round("score", round_to).alias("score"))
-    topn = full.orderBy(F.desc("score"), F.asc("doc_id")).limit(from_ + size)
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    return topn.select(w.alias("rank"), "doc_id", "score").where(
-        F.col("rank") > from_
-    )
+    return rank_top(full, from_ + size).where(F.col("rank") > from_)
 
 
 def highlight_terms_of(dsl: dict) -> list[str]:
@@ -901,80 +846,28 @@ def search_body_adhoc(
     return _search_body(_AdhocCompiler(df, text_col, id_col), body, round_to)
 
 
-_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _sql_lit(v: Any) -> str | None:
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    return None
-
-
-def _filters_to_sql(filters: list[dict]) -> str | None:
-    """Compile pure filter clauses to ONE docs-table SQL predicate for
-    bm25_topk_filtered; None = a clause is outside the routable subset."""
-    parts: list[str] = []
-    for c in filters:
-        kind, body = _leaf_body(c)
-        if kind == "match_all":
-            parts.append("true")
-            continue
-        if kind not in ("term", "terms", "range"):
-            return None
-        field, val = _leaf_body(body)
-        if not _IDENT.match(field):
-            return None
-        if kind == "term":
-            if isinstance(val, dict):
-                val = val.get("value")
-            lit = _sql_lit(val)
-            if lit is None:
-                return None
-            parts.append(f"{field} = {lit}")
-        elif kind == "terms":
-            lits = [_sql_lit(v) for v in val]
-            if any(x is None for x in lits) or not lits:
-                return None
-            parts.append(f"{field} IN ({', '.join(lits)})")
-        else:  # range
-            ops = {"gt": ">", "gte": ">=", "lt": "<", "lte": "<="}
-            for op, v in val.items():
-                lit = _sql_lit(v)
-                if op not in ops or lit is None:
-                    return None
-                parts.append(f"{field} {ops[op]} {lit}")
-    return " AND ".join(parts) if parts else "true"
-
-
 def _route_indexed(
     spark: SparkSession, index_dir: str, dsl: dict, k: int
 ) -> DataFrame | None:
     """Single-scoring-leaf fast path: when the query is one match /
-    match_phrase / prefix / fuzzy / wildcard / regexp leaf (optionally
-    wrapped in a bool with pure filter siblings), dispatch to the
-    dedicated indexed operator — block-max WAND over posting_blocks for
-    match, the positions-table phrase scorer, the dictionary-rewrite
-    multi-term family — instead of compiling the generic full postings
-    aggregate. Scoring is identical (test_dsl.py equivalence suite);
-    only the physical plan changes. Returns None when the shape is not
-    routable and the general compiler should run."""
-    from .bm25 import bm25_topk_filtered
+    match_phrase / match_phrase_prefix / prefix / fuzzy / wildcard /
+    regexp leaf (optionally wrapped in a bool with that one ``must``
+    clause and nothing else), dispatch to the dedicated indexed operator
+    — the index engine's block-max WAND over posting_blocks for match and
+    the multi-term rewrites, the positions-table phrase scorers — instead
+    of compiling the generic full postings aggregate. Scoring is
+    identical (test_dsl.py equivalence suite); only the physical plan
+    changes. Returns None when the shape is not routable and the general
+    compiler should run: filters, for one, apply to the full scored set
+    before truncation there."""
+    from .multiterm import _rewrite_topk
     from .wand import bm25_topk_wand
 
     kind, body = _leaf_body(dsl)
-    filters: list[dict] = []
     if kind == "bool":
-        if set(body) - {"must", "filter"}:
+        if set(body) - {"must", "filter"} or body.get("filter") or len(body.get("must", [])) != 1:
             return None
-        must = body.get("must", [])
-        filters = list(body.get("filter", []))
-        if len(must) != 1:
-            return None
-        kind, body = _leaf_body(must[0])
+        kind, body = _leaf_body(body["must"][0])
     boost = 1.0
     if isinstance(body, dict) and len(body) == 1:
         _f, spec = _leaf_body(body)
@@ -991,15 +884,8 @@ def _route_indexed(
             text = spec["query"]
         else:
             text = spec
-        if filters:
-            pred = _filters_to_sql(filters)
-            if pred is None:
-                return None
-            out = bm25_topk_filtered(spark, index_dir, text, pred, k=k)
-        else:
-            out = bm25_topk_wand(spark, index_dir, text, k=k)
-    elif not filters and kind == "match_phrase_prefix":
-        from ..tableio import TableIO
+        out = bm25_topk_wand(spark, index_dir, text, k=k)
+    elif kind == "match_phrase_prefix":
         from .phrase import phrase_prefix_topk
 
         if not TableIO(index_dir).exists("positions"):
@@ -1015,8 +901,7 @@ def _route_indexed(
         else:
             text, maxe = spec, 50
         out = phrase_prefix_topk(spark, index_dir, text, k=k, max_expansions=maxe)
-    elif not filters and kind == "match_phrase":
-        from ..tableio import TableIO
+    elif kind == "match_phrase":
         from .phrase import phrase_topk
 
         if not TableIO(index_dir).exists("positions"):
@@ -1031,9 +916,7 @@ def _route_indexed(
         else:
             text, slop = spec, 0
         out = phrase_topk(spark, index_dir, text, k=k, proximity=True, slop=slop)
-    elif not filters and kind in ("prefix", "wildcard", "regexp", "fuzzy"):
-        from . import multiterm as mt
-
+    elif kind in MAX_EXPANSIONS:  # prefix / wildcard / regexp / fuzzy
         field, spec = _leaf_body(body)
         if field != "content":
             return None
@@ -1044,15 +927,9 @@ def _route_indexed(
             value = spec["value"]
         else:
             value = spec
-        if kind == "prefix":
-            out = mt.prefix_topk(spark, index_dir, value, k=k)
-        elif kind == "wildcard":
-            out = mt.wildcard_topk(spark, index_dir, value, k=k)
-        elif kind == "regexp":
-            out = mt.regexp_topk(spark, index_dir, value, k=k)
-        else:
-            max_edits = int(spec.get("fuzziness", 1)) if isinstance(spec, dict) else 1
-            out = mt.fuzzy_topk(spark, index_dir, value, max_edits=max_edits, k=k)
+        max_edits = int(spec.get("fuzziness", 1)) if isinstance(spec, dict) else 1
+        pred = term_pred(kind, value, max_edits)
+        out = _rewrite_topk(spark, index_dir, pred, k, MAX_EXPANSIONS[kind])
     if out is None:
         return None
     score = (F.col("score") * boost).alias("score") if boost != 1.0 else F.col("score")
@@ -1081,13 +958,26 @@ def search(
     if routed is not None:
         return routed.where(F.col("rank") > from_)
     full = _Compiler(spark, index_dir).compile(dsl)
-    topn = full.orderBy(F.desc("score"), F.asc("doc_id")).limit(from_ + size)
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    return topn.select(w.alias("rank"), "doc_id", "score").where(
-        F.col("rank") > from_
-    )
+    return rank_top(full, from_ + size).where(F.col("rank") > from_)
+
+
+def bm25_topk_filtered(
+    spark: SparkSession,
+    index_dir: str,
+    query_text: str,
+    predicate: str,
+    k: int = 10,
+) -> DataFrame:
+    """Filtered search (Lucene filter-query analog): (rank, doc_id, score)
+    top-k BM25 among docs whose ``docs``-table row matches the SQL
+    ``predicate`` (e.g. "lang = 'python'"). Statistics stay corpus-wide —
+    a filter narrows the answer, not idf/avgdl — and the filter reaches
+    the docs scan as a pushed predicate, then joins the compiler's full
+    scored set as a left-semi (exact: applied BEFORE top-k truncation)."""
+    compiler = _Compiler(spark, index_dir)
+    scored = compiler.compile({"match": {"content": query_text}})
+    allowed = compiler.io.read(spark, "docs").where(predicate).select("doc_id")
+    return rank_top(scored.join(allowed, "doc_id", "left_semi"), k)
 
 
 def aggregations(

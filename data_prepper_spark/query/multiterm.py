@@ -1,12 +1,16 @@
-"""Multi-term query surface: prefix, fuzzy, and facet queries.
+"""Multi-term query surface: prefix, fuzzy, wildcard, regexp,
+more_like_this and facet queries.
 
 The reference delegates these to OpenSearch/Lucene (PrefixQuery,
 FuzzyQuery, terms aggregations); the Spark-native renditions rewrite a
-term predicate into a concrete term set against the DICTIONARY (tiny
-vs the corpus, term-sorted parquet so a prefix probe is a row-group
-range scan) and then score the union — Lucene's SCORING_BOOLEAN_REWRITE:
-the multi-term query behaves as a bool-OR of TermQueries, each doc's
-score the sum of its matched terms' BM25 contributions.
+term predicate (``term_pred``) into a concrete term set against the
+DICTIONARY (tiny vs the corpus, term-sorted parquet so a prefix probe is
+a row-group range scan), capped lowest-df-first at ``MAX_EXPANSIONS``,
+and then score the union — Lucene's SCORING_BOOLEAN_REWRITE: the
+multi-term query behaves as a bool-OR of TermQueries, each doc's score
+the sum of its matched terms' BM25 contributions. ``terms_topk`` serves
+that bool-OR through the index engine (``wand.bm25_topk_wand``); the DSL
+compiler uses the same predicates and caps for its scoring leaves.
 
 Every operator has an index-free twin over any (id, text) DataFrame
 (used by the oracle-checked driver queries); indexed and ad-hoc paths
@@ -17,12 +21,58 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..analyzer import tokenize_py, tokens_col
 from ..tableio import TableIO
 from ..util import spread
-from .common import B, K1, dict_df, load_stats
+from .common import B, K1, dict_df, load_stats, rank_top
+
+# default expansion cap per rewrite kind (Lucene's maxExpansions); the
+# Levenshtein neighbourhood of a fuzzy term is narrower
+MAX_EXPANSIONS = {"prefix": 128, "wildcard": 128, "regexp": 128, "fuzzy": 64}
+
+
+def _wildcard_regex(pattern: str) -> str:
+    """Lucene wildcard syntax -> anchored Java/RE2-safe regex: '*' = any
+    run, '?' = one char, everything else literal."""
+    import re as _re
+
+    out = []
+    for ch in pattern:
+        if ch == "*":
+            out.append(".*")
+        elif ch == "?":
+            out.append(".")
+        else:
+            out.append(_re.escape(ch))
+    return "^" + "".join(out) + "$"
+
+
+def term_pred(kind: str, value: str, max_edits: int = 1, prefix_length: int = 1) -> Column:
+    """The dictionary predicate of a multi-term query over a ``term``
+    column:
+
+    - ``prefix``: ``startswith`` (pushes as a [prefix, prefix+0xFF) bound);
+    - ``wildcard``: '*' any run, '?' one char; a leading literal also
+      bounds the scan by prefix (Lucene's term-index trick);
+    - ``regexp``: full match, anchored like Lucene;
+    - ``fuzzy``: within ``max_edits`` Levenshtein edits, sharing the first
+      ``prefix_length`` chars (Lucene's prefixLength, which also turns the
+      probe into a prefix range scan instead of a full levenshtein pass).
+    """
+    t = F.col("term")
+    if kind == "prefix":
+        return t.startswith(value)
+    if kind == "wildcard":
+        pred = t.rlike(_wildcard_regex(value))
+        lit_prefix = value.split("*")[0].split("?")[0]
+        return t.startswith(lit_prefix) & pred if lit_prefix else pred
+    if kind == "regexp":
+        return t.rlike(value if value.startswith("^") else f"^(?:{value})$")
+    if kind == "fuzzy":
+        pred = F.levenshtein(t, F.lit(value)) <= max_edits
+        return t.startswith(value[:prefix_length]) & pred if prefix_length > 0 else pred
+    raise ValueError(f"unsupported multi-term query: {kind}")
 
 
 def _expand_terms(
@@ -48,41 +98,22 @@ def terms_topk(
     spark: SparkSession, index_dir: str, terms: list[str], k: int = 10
 ) -> DataFrame:
     """(rank, doc_id, score): bool-OR BM25 over an explicit term set —
-    the shared scorer behind prefix/fuzzy rewrites. Term-pruned postings
-    scan + broadcast idf join + hash agg + TakeOrderedAndProject."""
-    from .bm25 import score_expr
-    from .common import query_term_stats
+    the scorer behind the dictionary rewrites, one ``bm25_topk_wand``
+    call. The terms reach the engine as query text, so only terms the
+    analyzer maps to themselves are kept: every dictionary term is one
+    (analyzer output is ``[a-z0-9]+``), and a term that is not can never
+    be in the dictionary, so dropping it changes no answer."""
+    from .wand import bm25_topk_wand
 
-    io = TableIO(index_dir)
-    n_docs, avgdl = load_stats(spark, io)
-    empty = "rank int, doc_id long, score double"
-    tstats = query_term_stats(spark, io, sorted(set(terms)), n_docs)
-    if not tstats:
-        return spark.createDataFrame([], empty)
-    idf_df = spark.createDataFrame(
-        [(t, s["idf"]) for t, s in tstats.items()], "term string, idf double"
-    )
-    from .common import live_filter
+    kept = [t for t in terms if tokenize_py(t) == [t]]
+    return bm25_topk_wand(spark, index_dir, " ".join(kept), k)
 
-    posts = io.read(spark, "postings").where(F.col("term").isin(list(tstats)))
-    topk = (
-        live_filter(
-            spark, io,
-            posts.join(F.broadcast(idf_df), "term")
-            .select(
-                "doc_id",
-                score_expr(F.col("idf"), F.col("tf"), F.col("doc_len"), avgdl).alias("s"),
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("s").alias("score")),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    return topk.select(w.alias("rank"), "doc_id", "score")
+
+def _rewrite_topk(
+    spark: SparkSession, index_dir: str, pred: Column, k: int, max_expansions: int
+) -> DataFrame:
+    terms = _expand_terms(spark, TableIO(index_dir), pred, max_expansions)
+    return terms_topk(spark, index_dir, terms, k)
 
 
 def prefix_topk(
@@ -90,18 +121,10 @@ def prefix_topk(
     index_dir: str,
     prefix: str,
     k: int = 10,
-    max_expansions: int = 128,
+    max_expansions: int = MAX_EXPANSIONS["prefix"],
 ) -> DataFrame:
-    """Lucene PrefixQuery with scoring-boolean rewrite. The dictionary
-    probe is a sorted-parquet range scan (startswith pushes as a
-    [prefix, prefix+0xFF) bound)."""
-    io = TableIO(index_dir)
-    terms = _expand_terms(
-        spark, io, F.col("term").startswith(prefix), max_expansions
-    )
-    if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
-    return terms_topk(spark, index_dir, terms, k)
+    """Lucene PrefixQuery with scoring-boolean rewrite."""
+    return _rewrite_topk(spark, index_dir, term_pred("prefix", prefix), k, max_expansions)
 
 
 def fuzzy_topk(
@@ -111,21 +134,37 @@ def fuzzy_topk(
     max_edits: int = 1,
     k: int = 10,
     prefix_length: int = 1,
-    max_expansions: int = 64,
+    max_expansions: int = MAX_EXPANSIONS["fuzzy"],
 ) -> DataFrame:
     """Lucene FuzzyQuery analog: terms within ``max_edits`` Levenshtein
-    edits of ``term`` (sharing the first ``prefix_length`` chars, like
-    Lucene's prefixLength — it also turns the dictionary probe into a
-    prefix range scan instead of a full levenshtein pass), scored as a
-    bool-OR of the matched terms."""
-    io = TableIO(index_dir)
-    pred = F.levenshtein(F.col("term"), F.lit(term)) <= max_edits
-    if prefix_length > 0:
-        pred = F.col("term").startswith(term[:prefix_length]) & pred
-    terms = _expand_terms(spark, io, pred, max_expansions)
-    if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
-    return terms_topk(spark, index_dir, terms, k)
+    edits of ``term`` sharing its first ``prefix_length`` chars, scored
+    as a bool-OR of the matched terms."""
+    pred = term_pred("fuzzy", term, max_edits, prefix_length)
+    return _rewrite_topk(spark, index_dir, pred, k, max_expansions)
+
+
+def wildcard_topk(
+    spark: SparkSession,
+    index_dir: str,
+    pattern: str,
+    k: int = 10,
+    max_expansions: int = MAX_EXPANSIONS["wildcard"],
+) -> DataFrame:
+    """Lucene WildcardQuery analog ('*' any run, '?' one char), rewritten
+    against the dictionary and scored as a bool-OR."""
+    return _rewrite_topk(spark, index_dir, term_pred("wildcard", pattern), k, max_expansions)
+
+
+def regexp_topk(
+    spark: SparkSession,
+    index_dir: str,
+    regex: str,
+    k: int = 10,
+    max_expansions: int = MAX_EXPANSIONS["regexp"],
+) -> DataFrame:
+    """Lucene RegexpQuery analog: dictionary terms fully matching the
+    regex (anchored, like Lucene) scored as a bool-OR."""
+    return _rewrite_topk(spark, index_dir, term_pred("regexp", regex), k, max_expansions)
 
 
 def facet_counts(
@@ -169,14 +208,14 @@ def _pred_topk_adhoc(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    term_pred,
+    pred: Column,
     k: int,
     round_to: int,
     max_expansions: int,
 ) -> DataFrame:
     """Shared ad-hoc multi-term scorer: tokenize once, keep postings of
-    terms satisfying ``term_pred`` (a Column -> Column predicate over the
-    term), cap the expansion at the ``max_expansions`` lowest-df terms
+    terms satisfying ``pred`` (a predicate over the ``term`` column, e.g.
+    ``term_pred``), cap the expansion at the ``max_expansions`` lowest-df terms
     (Lucene parity with the indexed path), then the standard adhoc BM25
     tail. Corpus stats (n_docs/avgdl) cover ALL docs."""
     base = spread(
@@ -188,7 +227,7 @@ def _pred_topk_adhoc(
     stats = base.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
     posts = (
         base.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .where(term_pred(F.col("term")))
+        .where(pred)
         .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -206,16 +245,7 @@ def _pred_topk_adhoc(
             ).alias("s"),
         )
     )
-    topk = (
-        scored.groupBy("doc_id")
-        .agg(F.round(F.sum("s"), round_to).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    return topk.select(w.alias("rank"), "doc_id", "score")
+    return rank_top(scored.groupBy("doc_id").agg(F.round(F.sum("s"), round_to).alias("score")), k)
 
 
 def prefix_topk_adhoc(
@@ -225,12 +255,10 @@ def prefix_topk_adhoc(
     prefix: str,
     k: int = 10,
     round_to: int = 4,
-    max_expansions: int = 128,
+    max_expansions: int = MAX_EXPANSIONS["prefix"],
 ) -> DataFrame:
     return _pred_topk_adhoc(
-        df, text_col, id_col,
-        lambda t: t.startswith(prefix),
-        k, round_to, max_expansions,
+        df, text_col, id_col, term_pred("prefix", prefix), k, round_to, max_expansions
     )
 
 
@@ -243,14 +271,9 @@ def fuzzy_topk_adhoc(
     k: int = 10,
     round_to: int = 4,
     prefix_length: int = 1,
-    max_expansions: int = 64,
+    max_expansions: int = MAX_EXPANSIONS["fuzzy"],
 ) -> DataFrame:
-    def pred(t):
-        c = F.levenshtein(t, F.lit(term)) <= max_edits
-        if prefix_length > 0:
-            c = t.startswith(term[:prefix_length]) & c
-        return c
-
+    pred = term_pred("fuzzy", term, max_edits, prefix_length)
     return _pred_topk_adhoc(df, text_col, id_col, pred, k, round_to, max_expansions)
 
 
@@ -328,11 +351,7 @@ def more_like_this(
     if not terms:
         return spark.createDataFrame([], "rank int, doc_id long, score double")
     out = terms_topk(spark, index_dir, terms, k + 1)
-    out = out.where(F.col("doc_id") != doc_id).limit(k)
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    return out.select(w.alias("rank"), "doc_id", "score")
+    return rank_top(out.where(F.col("doc_id") != doc_id), k)
 
 
 def highlight_adhoc(
@@ -452,70 +471,9 @@ def more_like_this_adhoc(
     if not terms:
         return spark.createDataFrame([], empty)
     out = _pred_topk_adhoc(
-        df, text_col, id_col, lambda t: t.isin(terms), k + 1, round_to, len(terms)
+        df, text_col, id_col, F.col("term").isin(terms), k + 1, round_to, len(terms)
     )
-    out = out.where(F.col("doc_id") != doc_id).limit(k)
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    return out.select(w.alias("rank"), "doc_id", "score")
-
-
-def _wildcard_regex(pattern: str) -> str:
-    """Lucene wildcard syntax -> anchored Java/RE2-safe regex: '*' = any
-    run, '?' = one char, everything else literal."""
-    import re as _re
-
-    out = []
-    for ch in pattern:
-        if ch == "*":
-            out.append(".*")
-        elif ch == "?":
-            out.append(".")
-        else:
-            out.append(_re.escape(ch))
-    return "^" + "".join(out) + "$"
-
-
-def wildcard_topk(
-    spark: SparkSession,
-    index_dir: str,
-    pattern: str,
-    k: int = 10,
-    max_expansions: int = 128,
-) -> DataFrame:
-    """Lucene WildcardQuery analog ('*' any run, '?' one char), rewritten
-    against the dictionary and scored as a bool-OR. A leading-literal
-    pattern prunes the dictionary scan via the derived prefix bound
-    (same trick Lucene plays with the term index)."""
-    io = TableIO(index_dir)
-    pred = F.col("term").rlike(_wildcard_regex(pattern))
-    lit_prefix = pattern.split("*")[0].split("?")[0]
-    if lit_prefix:
-        pred = F.col("term").startswith(lit_prefix) & pred
-    terms = _expand_terms(spark, io, pred, max_expansions)
-    if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
-    return terms_topk(spark, index_dir, terms, k)
-
-
-def regexp_topk(
-    spark: SparkSession,
-    index_dir: str,
-    regex: str,
-    k: int = 10,
-    max_expansions: int = 128,
-) -> DataFrame:
-    """Lucene RegexpQuery analog: dictionary terms fully matching the
-    regex (anchored, like Lucene) scored as a bool-OR."""
-    io = TableIO(index_dir)
-    anchored = regex if regex.startswith("^") else f"^(?:{regex})$"
-    terms = _expand_terms(
-        spark, io, F.col("term").rlike(anchored), max_expansions
-    )
-    if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
-    return terms_topk(spark, index_dir, terms, k)
+    return rank_top(out.where(F.col("doc_id") != doc_id), k)
 
 
 def wildcard_topk_adhoc(
@@ -525,11 +483,10 @@ def wildcard_topk_adhoc(
     pattern: str,
     k: int = 10,
     round_to: int = 4,
-    max_expansions: int = 128,
+    max_expansions: int = MAX_EXPANSIONS["wildcard"],
 ) -> DataFrame:
-    rx = _wildcard_regex(pattern)
     return _pred_topk_adhoc(
-        df, text_col, id_col, lambda t: t.rlike(rx), k, round_to, max_expansions
+        df, text_col, id_col, term_pred("wildcard", pattern), k, round_to, max_expansions
     )
 
 

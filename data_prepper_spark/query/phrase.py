@@ -32,6 +32,7 @@ from ..analyzer import tokenize_py, tokens_col
 from ..index.build import doc_id_col, shard_col
 from ..tableio import TableIO
 from ..util import spread
+from .common import rank_top
 
 
 def positions_from_docs(source: DataFrame, n_shards: int = 64) -> DataFrame:
@@ -245,8 +246,7 @@ def phrase_topk(
     1/(1 + excess gaps), so tighter matches rank higher among docs with
     the same match count (slop=0 reduces to the plain count).
     """
-    from .bm25 import score_expr
-    from .common import load_stats, query_term_stats
+    from .common import load_stats, query_term_stats, score_expr, score_terms
 
     io = TableIO(index_dir)
     n_docs, avgdl = load_stats(spark, io)
@@ -257,11 +257,6 @@ def phrase_topk(
     if not tstats:
         return spark.createDataFrame([], empty)
     matches = phrase_docs(spark, index_dir, phrase, slop=slop)
-    from pyspark.sql.window import Window
-
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
     if proximity:
         missing = [t for t in all_terms if t not in tstats]
         if missing:
@@ -276,27 +271,9 @@ def phrase_topk(
             "n_matches",
             score_expr(F.lit(sum_idf), pf, F.col("doc_len"), avgdl).alias("score"),
         )
-        topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return topk.select(w.alias("rank"), "doc_id", "score", "n_matches")
-    idf_df = spark.createDataFrame(
-        [(t, s["idf"]) for t, s in tstats.items()], "term string, idf double"
-    )
-    posts = io.read(spark, "postings").where(F.col("term").isin(list(tstats)))
-    scored = (
-        posts.join(F.broadcast(idf_df), "term")
-        .select(
-            "doc_id",
-            score_expr(F.col("idf"), F.col("tf"), F.col("doc_len"), avgdl).alias("s"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("s").alias("score"))
-    )
-    topk = (
-        matches.join(scored, "doc_id")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return topk.select(w.alias("rank"), "doc_id", "score", "n_matches")
+        return rank_top(scored, k, "n_matches")
+    scored = score_terms(io.read(spark, "postings"), tstats, avgdl)
+    return rank_top(matches.join(scored, "doc_id"), k, "n_matches")
 
 
 def phrase_match_adhoc(
@@ -456,13 +433,7 @@ def phrase_topk_adhoc(
         ).alias("score"),
         "n_matches",
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    from pyspark.sql.window import Window
-
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    return topk.select(w.alias("rank"), "doc_id", "score", "n_matches")
+    return rank_top(scored, k, "n_matches")
 
 
 # --------------------------------------------------------------------------
@@ -490,9 +461,8 @@ def phrase_prefix_scores(
 
     Reference: OpenSearch match_phrase_prefix -> Lucene
     MultiPhraseQuery (MatchQuery.Type.PHRASE_PREFIX)."""
-    from .bm25 import score_expr
     from .common import idf as _idf
-    from .common import load_stats, query_term_stats
+    from .common import load_stats, query_term_stats, score_expr
     from .multiterm import _expand_terms
 
     io = TableIO(index_dir)
@@ -573,14 +543,7 @@ def phrase_prefix_topk(
     max_expansions: int = 50,
 ) -> DataFrame:
     """(rank, doc_id, score, n_matches) top-k for match_phrase_prefix."""
-    from pyspark.sql.window import Window
-
-    scored = phrase_prefix_scores(spark, index_dir, text, max_expansions)
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return topk.select(w.alias("rank"), "doc_id", "score", "n_matches")
+    return rank_top(phrase_prefix_scores(spark, index_dir, text, max_expansions), k, "n_matches")
 
 
 def phrase_prefix_scores_adhoc(
@@ -688,13 +651,7 @@ def phrase_prefix_topk_adhoc(
     round_to: int = 4,
 ) -> DataFrame:
     """Top-k wrapper over ``phrase_prefix_scores_adhoc``."""
-    from pyspark.sql.window import Window
-
     scored = phrase_prefix_scores_adhoc(
         docs, content_col, id_col, text, max_expansions, round_to
     )
-    w = F.row_number().over(
-        Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return topk.select(w.alias("rank"), "doc_id", "score", "n_matches")
+    return rank_top(scored, k, "n_matches")

@@ -119,7 +119,7 @@ def main() -> None:
         from data_prepper_spark.query.engine import IndexQueryEngine
 
         if args.filter:
-            from data_prepper_spark.query.bm25 import bm25_topk_filtered
+            from data_prepper_spark.query.dsl import bm25_topk_filtered
 
             for qtext in args.q:
                 print(f"query: {qtext!r} filter: {args.filter!r}")

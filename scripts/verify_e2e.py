@@ -8,7 +8,7 @@ sys.path.insert(0, ".")
 from data_prepper_spark.session import get_spark
 from data_prepper_spark.corpus import write_code_files
 from data_prepper_spark.index.build import build_index
-from data_prepper_spark.query.bm25 import bm25_topk
+from tests.bm25_dataframe import bm25_topk
 from data_prepper_spark.query.wand import bm25_topk_wand
 from data_prepper_spark.query.engine import IndexQueryEngine
 from pyspark.sql import functions as F

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index.build import build_index, delete_docs, doc_id_col
-from data_prepper_spark.query.bm25 import bm25_topk
+from tests.bm25_dataframe import bm25_topk
 from data_prepper_spark.query.wand import bm25_topk_wand
 
 Q = "def return"

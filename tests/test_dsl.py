@@ -24,7 +24,7 @@ def dsl_index(spark, corpus_dir, index_dir):
 
 
 def test_match_equals_bm25(spark, dsl_index):
-    from data_prepper_spark.query.bm25 import bm25_topk
+    from tests.bm25_dataframe import bm25_topk
 
     got = search(spark, dsl_index, {"match": {"content": "def return value"}}, size=10).collect()
     want = bm25_topk(spark, dsl_index, "def return value", k=10).collect()
@@ -34,7 +34,7 @@ def test_match_equals_bm25(spark, dsl_index):
 
 
 def test_bool_filter_equals_filtered_search(spark, dsl_index):
-    from data_prepper_spark.query.bm25 import bm25_topk_filtered
+    from data_prepper_spark.query.dsl import bm25_topk_filtered
 
     dsl = {"bool": {"must": [{"match": {"content": "def return"}}],
                     "filter": [{"term": {"lang": "python"}}]}}
@@ -325,7 +325,7 @@ def test_query_string_equals_structured(spark, dsl_index):
 
 
 def test_query_string_single_leaf_routes_to_bm25(spark, dsl_index):
-    from data_prepper_spark.query.bm25 import bm25_topk
+    from tests.bm25_dataframe import bm25_topk
 
     got = search(spark, dsl_index, {"query_string": "def return value"}, size=10).collect()
     want = bm25_topk(spark, dsl_index, "def return value", k=10).collect()
@@ -843,6 +843,30 @@ def test_more_like_this_dsl_leaf_parity(spark, dsl_index):
     for a, b in zip(got, want):
         assert abs(a.score - b.score) < 1e-9
     assert all(r.doc_id != did for r in got)
+
+
+def test_rank_tail_k_guard(spark, dsl_index, corpus_dir):
+    """Every top-k path shares one ranking tail: k = 0 is the empty
+    answer and k < 0 raises ValueError, like the engine."""
+    from data_prepper_spark.query.adhoc import bm25_topk_adhoc
+    from data_prepper_spark.query.multiterm import prefix_topk
+    from data_prepper_spark.query.phrase import phrase_topk
+
+    docs = _corpus_df(spark, corpus_dir)
+    filtered = {"bool": {"must": [{"match": {"content": "def return"}}],
+                         "filter": [{"term": {"lang": "python"}}]}}
+    calls = {
+        "phrase_topk": lambda k: phrase_topk(spark, dsl_index, "return self", k=k),
+        "prefix_topk": lambda k: prefix_topk(spark, dsl_index, "par", k=k),
+        "bm25_topk_adhoc": lambda k: bm25_topk_adhoc(docs, "content", "doc_id", "def return", k=k),
+        "search": lambda k: search(spark, dsl_index, {"match": {"content": "def"}}, size=k),
+        "search compiled": lambda k: search(spark, dsl_index, filtered, size=k),
+    }
+    for name, call in calls.items():
+        assert call(1).count() == 1, name  # non-vacuous: the query has hits
+        assert call(0).collect() == [], name
+        with pytest.raises(ValueError):
+            call(-1).collect()
 
 
 def test_date_range_agg(spark):

@@ -57,6 +57,25 @@ def test_prefix_expansion_cap(spark, index_dir):
     )
 
 
+def test_dictionary_terms_are_analyzer_fixed_points(spark, index_dir):
+    """terms_topk hands its terms to the engine as query text, which is
+    exact only because the analyzer maps every dictionary term to itself."""
+    from data_prepper_spark.analyzer import tokenize_py
+    from data_prepper_spark.query.common import dict_df
+    from data_prepper_spark.tableio import TableIO
+
+    terms = [r.term for r in dict_df(spark, TableIO(index_dir)).select("term").collect()]
+    assert len(terms) > 50
+    assert [t for t in terms if tokenize_py(t) != [t]] == []
+
+
+def test_terms_topk_unanalyzed_terms_match_nothing(spark, index_dir):
+    """A term that is not in analyzed form is never in the dictionary, so
+    it matches nothing, even when its analyzed form would."""
+    assert terms_topk(spark, index_dir, ["return"], k=10).count() > 0
+    assert terms_topk(spark, index_dir, ["Return", "def_return"], k=10).collect() == []
+
+
 def test_facets_indexed_equals_adhoc(spark, index_dir, docs_id):
     q = "parse buffer"
     idxed = {

@@ -93,7 +93,7 @@ def test_phrase_topk_ranked(spark, corpus_dir, pos_index, index_dir):
     """phrase_topk = phrase filter + BM25 ranking: every returned doc
     contains the phrase, scores equal the terms' BM25 scores, order is
     (score desc, doc asc)."""
-    from data_prepper_spark.query.bm25 import bm25_topk
+    from tests.bm25_dataframe import bm25_topk
     from data_prepper_spark.query.phrase import phrase_topk
 
     # positions live beside the main index for this test

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from data_prepper_spark.analyzer import duckdb_tokens_sql
 from data_prepper_spark.index.build import build_index
-from data_prepper_spark.query.bm25 import bm25_topk
+from tests.bm25_dataframe import bm25_topk
 from data_prepper_spark.query.wand import bm25_topk_wand
 from tests.oracle import bm25_topk as oracle_topk
 from tests.wand_pointer import wand_shard_pointer
@@ -170,7 +170,7 @@ def test_batch_equals_per_query(spark, index_dir, monkeypatch):
 def test_bm25_topk_filtered_indexed(spark, index_dir, corpus_dir, corpus_docs):
     """Indexed filtered search: results satisfy the predicate, scores are
     the corpus-wide BM25 scores (filter narrows answers, not statistics)."""
-    from data_prepper_spark.query.bm25 import bm25_topk_filtered
+    from data_prepper_spark.query.dsl import bm25_topk_filtered
 
     docs = spark.read.parquet(corpus_dir)
     langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
