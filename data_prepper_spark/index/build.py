@@ -40,10 +40,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 from ..analyzer import tokens_col
+from ..query.common import live_filter
 from ..tableio import TableIO
 from ..util import spread
 from .varint import encode_payload_segmented
@@ -206,6 +207,28 @@ def dictionary_from_postings(postings: DataFrame) -> DataFrame:
     return postings.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),
         F.sum("tf").alias("cf"),
+    )
+
+
+def with_bloom(writer: DataFrameWriter, column: str) -> DataFrameWriter:
+    """``writer`` with a parquet bloom filter on ``column`` in every row
+    group, sized to the distinct values that row group receives.
+
+    parquet-mr's adaptive filter fills candidate filters of halving sizes,
+    from the 1 MiB maximum down to 512 B (12 candidates), drops each one
+    once the row group's distinct values exceed what it holds at the
+    default 1% false-positive rate, and writes the smallest survivor: a
+    row group of ~1k keys gets a 1-2 KiB filter, one of ~900k keys keeps
+    the 1 MiB maximum. A plain filter is always the maximum, because no
+    writer knows its NDV before it writes. parquet-mr reads the adaptive
+    switch only in its global form and the candidate count only per
+    column. It writes no filter for a column chunk that stayed entirely
+    dictionary-encoded (few distinct keys, e.g. a small positions file):
+    that chunk's dictionary prunes the row group exactly instead."""
+    return (
+        writer.option(f"parquet.bloom.filter.enabled#{column}", "true")
+        .option("parquet.bloom.filter.adaptive.enabled", "true")
+        .option(f"parquet.bloom.filter.candidates.number#{column}", "12")
     )
 
 
@@ -436,13 +459,15 @@ def _ledger_stats(
 def _tombstone_totals(spark: SparkSession, io: TableIO) -> tuple[int, int]:
     """(count, doc_len_sum) of tombstoned docs still present in the docs
     table — the stats adjustment a purge-aware merge applies. Zero-cost
-    when no delete has ever happened (no table, no job)."""
+    when no delete has ever happened (no table, no job). The semi-join
+    carries no broadcast hint: the tombstones table is unbounded, so AQE
+    picks broadcast or shuffle from its measured size."""
     if not io.exists("tombstones"):
         return 0, 0
     t = spark.read.parquet(io.path("tombstones")).select("doc_id").distinct()
     row = (
         spark.read.parquet(io.path("docs"))
-        .join(F.broadcast(t), "doc_id", "left_semi")
+        .join(t, "doc_id", "left_semi")
         .agg(F.count(F.lit(1)).alias("d"), F.sum("doc_len").alias("dl"))
         .collect()[0]
     )
@@ -580,13 +605,13 @@ def _run_stage_b(
         grp = postings.where(F.col("shard") % shard_groups == g)  # partition-pruned
         blocks = blocks_from_postings(grp, avgdl, block_size)
         obs_blocks = Observation()
-        # bloom filter on term_hash: a cold query's `term_hash IN (...)`
-        # scan skips row groups holding none of the query's terms
-        blocks.observe(obs_blocks, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).option("parquet.bloom.filter.enabled#term_hash", "true").partitionBy(
-            "shard"
-        ).parquet(io.path(f"{target}/group={g}"))
+        # sized bloom filter on term_hash (with_bloom): a cold query's
+        # `term_hash IN (...)` scan skips row groups holding none of the
+        # query's terms, for 1-2 bytes per distinct key
+        with_bloom(
+            blocks.observe(obs_blocks, F.count(F.lit(1)).alias("n")).write.mode("overwrite"),
+            "term_hash",
+        ).partitionBy("shard").parquet(io.path(f"{target}/group={g}"))
         n_blocks = int(obs_blocks.get["n"])
         counts.append((g, n_blocks))
         if commit_ledger:
@@ -600,23 +625,21 @@ def _commit_dict_df(
 ) -> None:
     """Shared dictionary writer + collision gate.
 
-    hash-partition + sortWithinPartitions: term lookups still prune via
-    parquet row-group min/max inside each sorted file. repartitionByRange
-    would add file-level pruning but costs a range-sampling pass that
-    RE-EXECUTES the whole dictionary aggregation — not worth it.
-    ``partitions`` scales O(shards) (default n_shards/4, floor 8) so the
-    dictionary's file count grows with the index instead of pinning at 8.
-    A parquet bloom filter on term lets the reader skip row groups for
-    ABSENT terms (the min/max ranges of hash-partitioned files are wide,
-    so misses would otherwise scan) — the dictionary-sidecar idea
-    expressed as a writer option."""
-    (
-        dic.repartition(partitions, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .parquet(io.path(dict_table))
-    )
+    hash-partition + sortWithinPartitions: every file's term min/max spans
+    the whole alphabet, so min/max prunes only row groups inside a file
+    that holds more than one. The file-level pruning is the parquet bloom
+    filter on term (``with_bloom``, sized to each row group's distinct
+    terms): a point lookup skips every file whose filter rules its terms
+    out, present and absent terms alike — the dictionary-sidecar idea
+    expressed as a writer option. repartitionByRange would give files
+    disjoint ranges but costs a range-sampling pass that RE-EXECUTES the
+    whole dictionary aggregation — not worth it. ``partitions`` scales
+    O(shards) (default n_shards/4, floor 8) so the dictionary's file
+    count grows with the index instead of pinning at 8."""
+    with_bloom(
+        dic.repartition(partitions, "term").sortWithinPartitions("term").write.mode("overwrite"),
+        "term",
+    ).parquet(io.path(dict_table))
     # collision gate on the WRITTEN table (a 2-column scan — re-checking the
     # unmaterialized dic would re-run the whole aggregation): a term_hash
     # shared by two terms would silently merge their postings at query time
@@ -692,13 +715,9 @@ def _write_segment_dictionary(
         .withColumn("term_hash", F.xxhash64("term"))
         .join(seg_ub, "term_hash", "left")
     )
-    (
-        dic.repartition(1)
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .parquet(io.rpath(f"posting_blocks/_segdict/group={seg}"))
-    )
+    with_bloom(
+        dic.repartition(1).sortWithinPartitions("term").write.mode("overwrite"), "term"
+    ).parquet(io.rpath(f"posting_blocks/_segdict/group={seg}"))
     mark("segment dictionary")
 
 
@@ -897,8 +916,8 @@ def _layered_segment(
     from pyspark.sql import Observation
 
     obs = Observation()
-    blocks.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").option(
-        "parquet.bloom.filter.enabled#term_hash", "true"
+    with_bloom(
+        blocks.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite"), "term_hash"
     ).partitionBy("shard").parquet(io.rpath(f"posting_blocks/group={seg}"))
     # side dictionary BEFORE the ledger commit row: once the 'done' row
     # lands the segment is fully searchable, stats included
@@ -945,13 +964,13 @@ def refresh_index(
 
     # purge-on-merge: tombstoned docs drop out of the re-merged blocks,
     # dictionary, AND the stats (Lucene's delete-then-merge); stats are
-    # computed only here — written post-swap
+    # computed only here — written post-swap. The purge is the serving
+    # paths' live_filter, which never broadcasts the unbounded tombstones
     minus = _tombstone_totals(spark, io)
     n_docs, avgdl = _ledger_stats(io, spark, minus=minus)
     postings = spark.read.parquet(io.path("postings"))
     if minus[0]:
-        t = spark.read.parquet(io.path("tombstones")).select("doc_id").distinct()
-        postings = postings.join(F.broadcast(t), "doc_id", "left_anti")
+        postings = live_filter(spark, io, postings)
     if n_shards is None:
         n_shards = int(postings.agg(F.max("shard")).collect()[0][0]) + 1
     _mark("stats")

@@ -132,8 +132,11 @@ def lookup_term_stats(dictionary, terms: list[str], n_docs: int) -> dict[str, di
     """{term: {df, hash, idf, max_wtf}} for the terms present in
     ``dictionary``, a ``dict_df`` frame: one driver collect.
 
-    The dictionary scan is pruned by parquet min/max on the sorted term
-    column — at design scale this touches a handful of row groups.
+    The dictionary files are hash-partitioned, so each one's term min/max
+    spans the alphabet and prunes nothing across files: the per-row-group
+    bloom filter on term (index/build.with_bloom) is what lets the scan
+    skip every file that holds none of ``terms``. Inside a file the
+    sorted term column's min/max still skips row groups.
     """
     if not terms:
         return {}

@@ -7,7 +7,8 @@ analog is a positions table beside the inverted index:
   positions(term_hash long, shard int, doc_id long, positions array<int>)
 
 partitioned by shard like posting_blocks, so a phrase query's scan is
-pruned to its terms' row groups per shard (bloom filter on term_hash).
+pruned to its terms' row groups per shard (a bloom filter on term_hash,
+sized to each row group's distinct hashes by index.build.with_bloom).
 
 Two execution paths, both pure Catalyst (no UDF):
 
@@ -29,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analyzer import tokenize_py, tokens_col
-from ..index.build import doc_id_col, shard_col
+from ..index.build import doc_id_col, shard_col, with_bloom
 from ..tableio import TableIO
 from ..util import spread
 from .common import rank_top
@@ -56,14 +57,13 @@ def build_positions(
     spark: SparkSession, source_path: str, out_dir: str, n_shards: int = 64
 ) -> None:
     """Write the positions table beside an index (same shard partitioning,
-    bloom filter on term_hash for pruned phrase scans)."""
+    sized bloom filter on term_hash for pruned phrase scans)."""
     io = TableIO(out_dir)
     pos = positions_from_docs(spark.read.parquet(source_path), n_shards)
-    pos.repartition("shard").sortWithinPartitions("term_hash", "doc_id").write.mode(
-        "overwrite"
-    ).option("parquet.bloom.filter.enabled#term_hash", "true").partitionBy(
-        "shard"
-    ).parquet(io.path("positions"))
+    sorted_pos = pos.repartition("shard").sortWithinPartitions("term_hash", "doc_id")
+    with_bloom(sorted_pos.write.mode("overwrite"), "term_hash").partitionBy("shard").parquet(
+        io.path("positions")
+    )
 
 
 def _adjacency_filter(pos_cols: list[Column]) -> Column:

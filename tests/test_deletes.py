@@ -181,3 +181,36 @@ def test_delete_on_layered_index(spark, corpus_dir, tmp_path):
     assert not (after & set(victims))
     n_all = spark.read.parquet(corpus_dir).count()
     assert r.n_docs == n_all - 2
+
+
+@pytest.mark.parametrize("extra_ids", [0, 1500])
+def test_refresh_purges_without_broadcast(spark, corpus_dir, tmp_path, monkeypatch, extra_ids):
+    """delete -> refresh never broadcasts the tombstones table (it is
+    unbounded): the purge is ``common.live_filter`` — a literal NOT-IN up
+    to MAX_DEAD_IDS tombstones, a plain anti-join above (``extra_ids``
+    absent ids push the count past the cap) — and the stats semi-join
+    carries no hint. The victims still leave blocks, stats and results."""
+    from data_prepper_spark.index.build import refresh_index, resolved_table_path
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus_dir, idx, n_shards=8, units=1, shard_groups=1)
+    before = bm25_topk_wand(spark, idx, Q, k=100000).collect()
+    victims = [before[0].doc_id, before[1].doc_id]
+    delete_docs(spark, idx, victims + [-(i + 1) for i in range(extra_ids)])
+
+    def no_broadcast(*a, **kw):
+        raise AssertionError("refresh broadcast the tombstones table")
+
+    monkeypatch.setattr(F, "broadcast", no_broadcast)
+    r = refresh_index(spark, idx)
+    monkeypatch.undo()
+
+    n_all = spark.read.parquet(corpus_dir).count()
+    assert r.n_docs == n_all - 2
+    live_postings = (
+        spark.read.parquet(f"{idx}/postings").where(~F.col("doc_id").isin(victims)).count()
+    )
+    blocks = spark.read.parquet(resolved_table_path(idx, "posting_blocks"))
+    assert blocks.agg(F.sum("n_docs")).collect()[0][0] == live_postings
+    got = {r2.doc_id for r2 in bm25_topk_wand(spark, idx, Q, k=100000).collect()}
+    assert got == {r2.doc_id for r2 in before} - set(victims)

@@ -133,3 +133,89 @@ def test_build_rejects_bad_source(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not sc.statusTracker().getJobIdsForGroup("bad_source")
     assert not out.exists()
+
+
+def _bloom_filters(spark, root, column):
+    """[(file, bloom filter or None, chunk is dictionary-encoded only)] for
+    every row group of every data file under ``root`` (underscore dirs
+    excluded, as readers do), read back through parquet-mr's own
+    reader."""
+    import glob
+    import os
+
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    out = []
+    for f in sorted(glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)):
+        if "/_" in f[len(root):]:
+            continue
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf
+            )
+        )
+        try:
+            for rg in reader.getRowGroups():
+                (col,) = [c for c in rg.getColumns() if c.getPath().toDotString() == column]
+                stats = col.getEncodingStats()
+                dict_only = stats is not None and not stats.hasNonDictionaryEncodedPages()
+                out.append((f, reader.readBloomFilter(col), dict_only))
+        finally:
+            reader.close()
+    return out
+
+
+def test_bloom_filters_sized_to_row_group(spark, index_dir, corpus_dir, tmp_path):
+    """Every key column the readers prune on carries a bloom filter in
+    every row group, sized to that row group's distinct keys: at ~1k
+    keys per row group none may be parquet-mr's 1 MiB maximum (nor
+    anywhere near it). Covers the fresh build's posting_blocks and
+    dictionary, a layered add's segment blocks and side dictionary, and
+    the positions table. parquet-mr writes no filter for a chunk that
+    stayed dictionary-encoded (positions' repeated term_hash at this
+    scale): its dictionary prunes instead. The dictionary's filters
+    answer 'might contain' for every term their file holds (no false
+    negatives)."""
+    import os
+    import shutil
+
+    from data_prepper_spark.index.build import add_to_index, resolved_table_path
+    from data_prepper_spark.query.phrase import build_positions
+
+    files = sorted(f for f in os.listdir(corpus_dir) if f.endswith(".parquet"))
+    base_d, add_d = str(tmp_path / "base"), str(tmp_path / "add")
+    os.makedirs(base_d), os.makedirs(add_d)
+    for i, f in enumerate(files):
+        shutil.copy(os.path.join(corpus_dir, f), base_d if i < len(files) // 2 else add_d)
+    lay = str(tmp_path / "layered")
+    build_index(spark, base_d, lay, n_shards=8, units=1, shard_groups=1)
+    add_to_index(spark, add_d, lay, n_shards=8, units=1, remerge=False)
+    build_positions(spark, corpus_dir, lay, n_shards=8)
+    lay_blocks = resolved_table_path(lay, "posting_blocks")
+    seg = max(
+        (g for g in os.listdir(lay_blocks) if g.startswith("group=")),
+        key=lambda g: int(g.split("=")[1]),
+    )  # the layered segment: base groups come first
+
+    tables = [
+        (resolved_table_path(index_dir, "posting_blocks"), "term_hash"),
+        (resolved_table_path(index_dir, "dictionary"), "term"),
+        (os.path.join(lay_blocks, seg), "term_hash"),
+        (os.path.join(lay_blocks, "_segdict"), "term"),
+        (os.path.join(lay, "positions"), "term_hash"),
+    ]
+    for root, column in tables:
+        filters = _bloom_filters(spark, root, column)
+        assert filters, root
+        for f, bf, dict_only in filters:
+            if bf is None:
+                assert dict_only, f"no bloom filter on {column} in {f}"
+                continue
+            assert bf.getBitsetSize() <= 16 * 1024, (f, bf.getBitsetSize())
+
+    binary = spark._jvm.org.apache.parquet.io.api.Binary
+    dic = resolved_table_path(index_dir, "dictionary")
+    for f, bf, _ in _bloom_filters(spark, dic, "term"):
+        terms = [r["term"] for r in spark.read.parquet(f).select("term").collect()]
+        assert terms
+        assert all(bf.findHash(bf.hash(binary.fromString(t))) for t in terms), f
