@@ -7,7 +7,7 @@ Prints exactly ONE JSON line:
    "query_p50_ms": ..., "query_p95_ms": ...}
 
 Headline set: the resumable fulltext index build (index/build.py, ledger +
-varint block compression) + block-max WAND/BM25 warm-path query latency
+bit-packed block compression) + block-max WAND/BM25 warm-path query latency
 (query/engine.py) over the documents table — the north-star workload —
 plus representative relational / parse / dedup / similarity queries.
 scripts/scaling_bench.py produces the two-parallelism scaling evidence

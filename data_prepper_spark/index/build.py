@@ -20,8 +20,9 @@ Spark build. Design choices, justified for a 1000-executor / 100 TB corpus:
   and corpus_stats are partial-agg rollups that reuse those outputs.
 
 - **Vectorized-only Python.** The single non-JVM step is the block encoder
-  (applyInPandas, Arrow batches, numpy tagged codec: bit-packed by default, varint fallback). Tokenize/explode/
-  count/aggregate are all whole-stage-codegen built-ins.
+  (applyInPandas, Arrow batches, the numpy bit-packing codec of
+  index/bitpack.py). Tokenize/explode/count/aggregate are all
+  whole-stage-codegen built-ins.
 
 - **Resumable** via a build ledger (the analog of the reference's
   lease-based source coordination, core:sourcecoordination/
@@ -47,22 +48,22 @@ from ..analyzer import tokens_col
 from ..query.common import live_filter
 from ..tableio import TableIO
 from ..util import spread
-from .varint import encode_payload_segmented
+from .bitpack import encode_payload_segmented
 
 K1 = 1.2
 B = 0.75
-# dps-0.2: block payloads gained a 1-byte codec-tag prefix (index/varint.py
-# tagged payload layer). An index whose ledger carries an older version would
-# silently mis-decode (the first varint byte read as a codec tag), so query
-# paths call check_index_compatibility() before touching blocks and fail with
-# a clear "rebuild required" instead.
+# dps-0.2: block payloads gained a 1-byte codec-tag prefix (LEB128 or
+# bit-packed).
 # dps-0.3: layered adds write per-segment SIDE dictionaries
 # (posting_blocks/<gen>/_segdict/group=N) instead of re-merging the full
-# dictionary per micro-batch; query paths union base + segments. A 0.2
-# index (fully merged dictionary, no segdicts) reads identically under
-# 0.3, so both versions stay compatible.
-CODE_VERSION = "dps-0.3"
-COMPATIBLE_VERSIONS = frozenset({CODE_VERSION, "dps-0.2"})
+# dictionary per micro-batch; query paths union base + segments.
+# dps-0.4: one block codec (index/bitpack.py): every buffer is [w][packed
+# bytes], with no codec tag and no pad, and >57-bit segments pack at w = 64
+# instead of falling back to LEB128.
+# An index written by any other version would silently mis-decode its
+# blocks, so query paths call check_index_compatibility() before touching
+# blocks and fail with a clear "rebuild required" instead.
+CODE_VERSION = "dps-0.4"
 
 # blocks are keyed by xxhash64(term), not the term string: the Python
 # block encoder and the WAND kernel then touch only fixed-width int64
@@ -106,8 +107,8 @@ def postings_from_docs(with_tokens: DataFrame, n_shards: int) -> DataFrame:
     """Logical postings (term, doc_id, tf, doc_len, shard).
 
     doc_len is denormalized onto every posting so the query path never
-    joins the (huge) docs table at scoring time; it compresses to ~1 byte
-    in the varint blocks.
+    joins the (huge) docs table at scoring time; it packs at the block's
+    max doc_len width, ~1-2 bytes per posting.
     """
     return (
         with_tokens.select("doc_id", "doc_len", F.explode("tokens").alias("term"))
@@ -117,16 +118,15 @@ def postings_from_docs(with_tokens: DataFrame, n_shards: int) -> DataFrame:
     )
 
 
-def _shard_block_builder(avgdl: float, block_size: int, codec: str = "bitpack") -> Callable:
+def _shard_block_builder(avgdl: float, block_size: int) -> Callable:
     """Vectorized whole-shard block encoder.
 
     One pandas frame per *shard* (not per term): sort by (term, doc_id),
     find term-run and block boundaries with numpy, `maximum.reduceat` the
     block maxima, and encode gaps/tfs/dls for ALL blocks in three
     vectorized passes (`encode_payload_segmented`: FastLanes-style
-    bit-packing at each block's max width, varint for >57-bit outliers;
-    buffers are tag-prefixed so mixed codecs coexist), slicing per-block
-    buffers by precomputed byte offsets. Replaces a per-(term,shard)
+    bit-packing at each block's max width, 64 bits for >57-bit blocks,
+    per-block buffers sliced by byte offsets). Replaces a per-(term,shard)
     applyInPandas that built ~1 pandas frame per term — two orders of
     magnitude fewer Python/pandas round-trips. Group memory = one shard's
     postings; ``n_shards`` is the knob that bounds it at design scale.
@@ -160,9 +160,9 @@ def _shard_block_builder(avgdl: float, block_size: int, codec: str = "bitpack") 
         gaps_all = np.empty(n, dtype=np.uint64)
         gaps_all[0] = 0
         gaps_all[1:] = doc_ids[1:].astype(np.uint64) - doc_ids[:-1].astype(np.uint64)
-        gap_bufs = encode_payload_segmented(gaps_all[~new_block], counts - 1, codec)
-        tf_bufs = encode_payload_segmented(tfs.astype(np.uint64), counts, codec)
-        dl_bufs = encode_payload_segmented(dls.astype(np.uint64), counts, codec)
+        gap_bufs = encode_payload_segmented(gaps_all[~new_block], counts - 1)
+        tf_bufs = encode_payload_segmented(tfs, counts)
+        dl_bufs = encode_payload_segmented(dls, counts)
         return pd.DataFrame(
             {
                 "term_hash": hashes[block_start],
@@ -181,14 +181,12 @@ def _shard_block_builder(avgdl: float, block_size: int, codec: str = "bitpack") 
     return build
 
 
-def blocks_from_postings(
-    postings: DataFrame, avgdl: float, block_size: int = 128, codec: str = "bitpack"
-) -> DataFrame:
+def blocks_from_postings(postings: DataFrame, avgdl: float, block_size: int = 128) -> DataFrame:
     slim = postings.select(
         F.xxhash64("term").alias("term_hash"), "shard", "doc_id", "tf", "doc_len"
     )
     return slim.groupBy("shard").applyInPandas(
-        _shard_block_builder(avgdl, block_size, codec), BLOCKS_SCHEMA
+        _shard_block_builder(avgdl, block_size), BLOCKS_SCHEMA
     )
 
 
@@ -309,18 +307,18 @@ def _ledger_latest(io: TableIO, spark: SparkSession) -> list[dict]:
 
 def check_index_compatibility(io: TableIO, spark: SparkSession) -> None:
     """Fail loudly if the index on disk was written by an incompatible code
-    version (e.g. pre-codec-tag dps-0.1 block payloads, which this build
-    would silently mis-decode). Reads only the (tiny) ledger."""
+    version (e.g. the codec-tagged dps-0.2/0.3 block payloads, which this
+    build would silently mis-decode). Reads only the (tiny) ledger."""
     versions = {
         str(r.get("code_version") or "<pre-versioned>")
         for r in _ledger_latest(io, spark)
         if r["state"] == "done"
     }
-    bad = versions - COMPATIBLE_VERSIONS
+    bad = versions - {CODE_VERSION}
     if bad:
         raise RuntimeError(
             f"index at {io.root} was written by incompatible code version(s) "
-            f"{sorted(bad)} (this build reads {sorted(COMPATIBLE_VERSIONS)}); "
+            f"{sorted(bad)} (this build reads {CODE_VERSION}); "
             "rebuild required: run build_index(resume=False) over the source"
         )
 
@@ -331,25 +329,6 @@ def _ledger_done(io: TableIO, spark: SparkSession) -> set[tuple[str, int]]:
         for r in _ledger_latest(io, spark)
         if r["state"] == "done"
     }
-
-
-def _make_mark():
-    import sys
-    import time as _time
-
-    debug = os.environ.get("DPS_BUILD_DEBUG") == "1"
-    state = {"t0": _time.time()}
-
-    def _mark(label: str) -> None:
-        if debug:
-            print(
-                f"BUILD_PHASE {label}: {_time.time() - state['t0']:.1f}s",
-                file=sys.stderr,
-                flush=True,
-            )
-        state["t0"] = _time.time()
-
-    return _mark
 
 
 def _source_files(source_path: str) -> list[str]:
@@ -425,7 +404,6 @@ def _run_stage_a(
     source_path: str,
     done: set[tuple[str, int]],
     fault_injector,
-    mark,
 ) -> None:
     """Stage A: tokenize + shard-partitioned posting runs, one ledger
     commit per (unit_id, files) work unit."""
@@ -440,7 +418,6 @@ def _run_stage_a(
         # codegen'd) analyzer, and the cache's memory pressure degraded
         # every concurrent stage — at 100 TB the cache wouldn't fit anyway
         _stage_a_unit(spark, io, u, spark.read.parquet(*fl), n_shards, source_path)
-        mark(f"stageA unit {u}")
 
 
 def _ledger_stats(
@@ -464,9 +441,9 @@ def _tombstone_totals(spark: SparkSession, io: TableIO) -> tuple[int, int]:
     picks broadcast or shuffle from its measured size."""
     if not io.exists("tombstones"):
         return 0, 0
-    t = spark.read.parquet(io.path("tombstones")).select("doc_id").distinct()
+    t = io.read(spark, "tombstones").select("doc_id").distinct()
     row = (
-        spark.read.parquet(io.path("docs"))
+        io.read(spark, "docs")
         .join(t, "doc_id", "left_semi")
         .agg(F.count(F.lit(1)).alias("d"), F.sum("doc_len").alias("dl"))
         .collect()[0]
@@ -495,9 +472,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     io = TableIO(index_dir)
     ids = [(int(d),) for d in doc_ids]
     if ids:
-        spark.createDataFrame(ids, "doc_id long").coalesce(1).write.mode(
-            "append"
-        ).parquet(io.path("tombstones"))
+        io.write(spark.createDataFrame(ids, "doc_id long").coalesce(1), "tombstones", mode="append")
     return len(ids)
 
 
@@ -584,7 +559,6 @@ def _run_stage_b(
     source_path: str,
     done: set[tuple[str, int]],
     fault_injector,
-    mark,
     target_table: str | None = None,
     commit_ledger: bool = True,
 ) -> list[tuple[int, int]]:
@@ -616,7 +590,6 @@ def _run_stage_b(
         counts.append((g, n_blocks))
         if commit_ledger:
             _ledger_append(io, spark, [("B", g, "done", 0, 0, n_blocks, 0, source_path, CODE_VERSION)])
-        mark(f"stageB group {g}")
     return counts
 
 
@@ -661,7 +634,6 @@ def _write_dictionary(
     spark: SparkSession,
     io: TableIO,
     postings: DataFrame,
-    mark,
     blocks_table: str | None = None,
     dict_table: str | None = None,
     partitions: int = 8,
@@ -671,16 +643,13 @@ def _write_dictionary(
     ``blocks_table``/``dict_table`` let the atomic refresh aggregate from /
     write to a not-yet-current generation dir."""
     blocks_all = spark.read.parquet(io.path(blocks_table or io.resolved("posting_blocks")))
-    ub = blocks_all.groupBy("term_hash").agg(
-        F.max("block_max_wtf").alias("max_wtf"), F.sum("n_docs").alias("n_blocks_docs")
-    )
+    ub = blocks_all.groupBy("term_hash").agg(F.max("block_max_wtf").alias("max_wtf"))
     dic = (
         dictionary_from_postings(postings)
         .withColumn("term_hash", F.xxhash64("term"))
-        .join(ub.drop("n_blocks_docs"), "term_hash", "left")
+        .join(ub, "term_hash", "left")
     )
     _commit_dict_df(spark, io, dic, dict_table or io.resolved("dictionary"), partitions)
-    mark("dictionary")
 
 
 def _write_segment_dictionary(
@@ -688,7 +657,6 @@ def _write_segment_dictionary(
     io: TableIO,
     new_posts: DataFrame,
     seg: int,
-    mark,
 ) -> None:
     """Per-segment SIDE dictionary for a layered add: aggregate ONLY the
     new units' postings (O(new docs) — no join against, and no rewrite
@@ -718,7 +686,6 @@ def _write_segment_dictionary(
     with_bloom(
         dic.repartition(1).sortWithinPartitions("term").write.mode("overwrite"), "term"
     ).parquet(io.rpath(f"posting_blocks/_segdict/group={seg}"))
-    mark("segment dictionary")
 
 
 def build_index(
@@ -738,7 +705,6 @@ def build_index(
     commits — raising from it simulates a mid-build crash.
     """
     files = _source_files(source_path)
-    _mark = _make_mark()
     io = TableIO(out_dir)
     if not resume:
         # fresh build into a possibly-dirty out_dir: the ledger is append-
@@ -766,18 +732,17 @@ def build_index(
 
     units = max(1, min(units, len(files)))
     unit_files = [(i, files[i::units]) for i in range(units)]
-    _run_stage_a(spark, io, unit_files, n_shards, source_path, done, fault_injector, _mark)
+    _run_stage_a(spark, io, unit_files, n_shards, source_path, done, fault_injector)
 
     n_docs, avgdl = _write_corpus_stats(spark, io)
     postings = spark.read.parquet(io.path("postings"))
-    _mark("corpus_stats")
 
     shard_groups = max(1, min(shard_groups, n_shards))
     _run_stage_b(
         spark, io, postings, avgdl, block_size, shard_groups, source_path,
-        done, fault_injector, _mark,
+        done, fault_injector,
     )
-    _write_dictionary(spark, io, postings, _mark, partitions=_dict_partitions(n_shards))
+    _write_dictionary(spark, io, postings, partitions=_dict_partitions(n_shards))
     return BuildResult(out_dir, n_docs, avgdl, n_shards)
 
 
@@ -819,7 +784,6 @@ def add_to_index(
     stage-B grouping is reused from the ledger.
     """
     files = _source_files(source_path)
-    _mark = _make_mark()
     io = TableIO(out_dir)
     latest = _ledger_latest(io, spark)
     a_rows = [r for r in latest if r["stage"] == "A" and r["state"] == "done"]
@@ -849,7 +813,7 @@ def add_to_index(
 
     units = max(1, min(units, len(files)))
     unit_files = [(first_u + i, files[i::units]) for i in range(units)]
-    _run_stage_a(spark, io, unit_files, n_shards, source_path, done, fault_injector, _mark)
+    _run_stage_a(spark, io, unit_files, n_shards, source_path, done, fault_injector)
 
     if remerge:
         return refresh_index(
@@ -863,7 +827,7 @@ def add_to_index(
     # whole add touches O(new docs) rows plus one dictionary-sized join.
     return _layered_segment(
         spark, io, out_dir, [u for u, _ in unit_files], source_path,
-        n_shards, block_size, _mark,
+        n_shards, block_size,
     )
 
 
@@ -875,7 +839,6 @@ def _layered_segment(
     source_path: str,
     n_shards: int,
     block_size: int,
-    _mark,
 ) -> BuildResult:
     """Encode committed stage-A units as one searchable layered segment +
     merged dictionary. Shared by add_to_index(remerge=False) and the
@@ -921,12 +884,11 @@ def _layered_segment(
     ).partitionBy("shard").parquet(io.rpath(f"posting_blocks/group={seg}"))
     # side dictionary BEFORE the ledger commit row: once the 'done' row
     # lands the segment is fully searchable, stats included
-    _write_segment_dictionary(spark, io, new_posts, seg, _mark)
+    _write_segment_dictionary(spark, io, new_posts, seg)
     _ledger_append(
         io, spark,
         [("B", seg, "done", 0, 0, int(obs.get["n"]), 0, lay_tag, CODE_VERSION)],
     )
-    _mark(f"layered segment {seg}")
     return BuildResult(out_dir, n_docs, avgdl, n_shards)
 
 
@@ -948,7 +910,6 @@ def refresh_index(
     one re-merge — Lucene's segment-merge economics, expressed as a ledger
     transition ('invalidated' -> 'done' rows carry the lineage).
     """
-    _mark = _make_mark()
     io = TableIO(out_dir)
     latest = _ledger_latest(io, spark)
     if not any(r["stage"] == "A" and r["state"] == "done" for r in latest):
@@ -973,7 +934,6 @@ def refresh_index(
         postings = live_filter(spark, io, postings)
     if n_shards is None:
         n_shards = int(postings.agg(F.max("shard")).collect()[0][0]) + 1
-    _mark("stats")
 
     # ---- atomic generation swap: every output below lands in a NOT-yet-
     # current `<table>.gen-N` dir; the single pointer-file rename in
@@ -996,11 +956,11 @@ def refresh_index(
         shutil.rmtree(io.path(pb_target), ignore_errors=True)
     counts = _run_stage_b(
         spark, io, postings, avgdl, block_size, shard_groups, source_tag,
-        set(), fault_injector, _mark,
+        set(), fault_injector,
         target_table=pb_target, commit_ledger=False,
     )
     _write_dictionary(
-        spark, io, postings, _mark,
+        spark, io, postings,
         blocks_table=pb_target, dict_table=f"dictionary.gen-{d_gen}",
         partitions=_dict_partitions(n_shards),
     )

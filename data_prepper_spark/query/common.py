@@ -79,7 +79,7 @@ def load_stats_full(spark: SparkSession, io: TableIO) -> tuple[int, float, int]:
     # the caller (IndexQueryEngine) decodes block payloads next — gate on
     # the ledger's code_version first so an index written by an
     # incompatible build fails with "rebuild required" instead of
-    # mis-decoding the codec-tag byte
+    # mis-decoding its blocks
     from ..index.build import check_index_compatibility
 
     check_index_compatibility(io, spark)
@@ -176,7 +176,7 @@ def tombstones(spark, io) -> tuple[int, list[int]]:
     on an index that never saw a delete (one existence check)."""
     if io is None or not io.exists("tombstones"):
         return 0, []
-    t = spark.read.parquet(io.path("tombstones")).select("doc_id").distinct()
+    t = io.read(spark, "tombstones").select("doc_id").distinct()
     ids = [int(r["doc_id"]) for r in t.limit(MAX_DEAD_IDS + 1).collect()]
     if len(ids) <= MAX_DEAD_IDS:
         return len(ids), ids
@@ -203,5 +203,5 @@ def live_filter(spark, io, df, dead: tuple[int, list[int]] | None = None):
         return df
     if ids:
         return df.where(~F.col("doc_id").isin(ids))
-    t = spark.read.parquet(io.path("tombstones")).select("doc_id").distinct()
+    t = io.read(spark, "tombstones").select("doc_id").distinct()
     return df.join(t, "doc_id", "left_anti")

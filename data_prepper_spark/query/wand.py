@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .common import K1, B
-from ..index.varint import decode_doc_ids_payload, decode_payload
+from ..index.bitpack import decode_doc_ids_payload, decode_payload
 
 _INF = np.iinfo(np.int64).max
 _EPS = 1e-12

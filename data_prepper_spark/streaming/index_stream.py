@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..index.build import _layered_segment, _make_mark, _stage_a_unit
+from ..index.build import _layered_segment, _stage_a_unit
 from ..tableio import TableIO
 
 # keeps streaming unit ids disjoint from batch-build unit ids
@@ -71,9 +71,7 @@ def index_stream_writer(
         tag = f"stream:batch={batch_id}"
         _stage_a_unit(spark, io, unit, batch_df, n_shards, tag)
         if layered:
-            _layered_segment(
-                spark, io, out_dir, [unit], tag, n_shards, block_size, _make_mark()
-            )
+            _layered_segment(spark, io, out_dir, [unit], tag, n_shards, block_size)
 
     w = stream_df.writeStream.foreachBatch(handle)
     if checkpoint_dir:

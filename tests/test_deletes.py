@@ -214,3 +214,56 @@ def test_refresh_purges_without_broadcast(spark, corpus_dir, tmp_path, monkeypat
     assert blocks.agg(F.sum("n_docs")).collect()[0][0] == live_postings
     got = {r2.doc_id for r2 in bm25_topk_wand(spark, idx, Q, k=100000).collect()}
     assert got == {r2.doc_id for r2 in before} - set(victims)
+
+
+def test_tombstone_io_goes_through_tableio(spark, corpus_dir, tmp_path, monkeypatch):
+    """delete -> query -> refresh reads and writes ``tombstones``, and reads
+    ``docs``, only through ``TableIO`` (so an Iceberg catalog sees them
+    too): no direct parquet reader or writer touches either table."""
+    import os
+
+    from pyspark.sql import DataFrameReader, DataFrameWriter
+
+    from data_prepper_spark.index.build import refresh_index
+    from data_prepper_spark.tableio import TableIO
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus_dir, idx, n_shards=8, units=1, shard_groups=1)
+    victims = [r.doc_id for r in bm25_topk_wand(spark, idx, Q, k=2).collect()]
+
+    calls, direct, depth = [], [], [0]
+
+    def via_tableio(method, kind):
+        def spy(self, *a, **kw):
+            calls.append((kind, kw.get("name", a[1] if len(a) > 1 else None)))
+            depth[0] += 1
+            try:
+                return method(self, *a, **kw)
+            finally:
+                depth[0] -= 1
+
+        return spy
+
+    def direct_parquet(method):
+        def spy(self, *paths, **kw):
+            if not depth[0]:
+                direct.extend(
+                    p for p in paths
+                    if os.path.relpath(p, idx).split(os.sep)[0] in ("tombstones", "docs")
+                )
+            return method(self, *paths, **kw)
+
+        return spy
+
+    monkeypatch.setattr(TableIO, "read", via_tableio(TableIO.read, "read"))
+    monkeypatch.setattr(TableIO, "write", via_tableio(TableIO.write, "write"))
+    monkeypatch.setattr(DataFrameReader, "parquet", direct_parquet(DataFrameReader.parquet))
+    monkeypatch.setattr(DataFrameWriter, "parquet", direct_parquet(DataFrameWriter.parquet))
+    delete_docs(spark, idx, victims)
+    got = {r.doc_id for r in bm25_topk_wand(spark, idx, Q, k=100000).collect()}
+    refresh_index(spark, idx)
+    monkeypatch.undo()
+
+    assert got and not (got & set(victims))
+    assert direct == []
+    assert {("write", "tombstones"), ("read", "tombstones"), ("read", "docs")} <= set(calls)

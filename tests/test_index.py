@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index.build import build_index
-from data_prepper_spark.index.varint import decode_doc_ids_payload, decode_payload
+from data_prepper_spark.index.bitpack import decode_doc_ids_payload, decode_payload
 
 
 def test_doc_ids_unique(spark, index_dir):

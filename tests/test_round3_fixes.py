@@ -67,13 +67,23 @@ def test_shard_groups_stable_across_layered_cycles(spark, corpus_dir, tmp_path):
     assert sorted(u for s, u in seen if s == "B") == [0, 1]
 
 
-def test_incompatible_code_version_fails_loudly(spark, corpus_dir, tmp_path, monkeypatch):
+def _assert_rebuild_required(spark, corpus_dir, tmp_path, monkeypatch, version):
     import data_prepper_spark.index.build as b
     from data_prepper_spark.query.wand import bm25_topk_wand
 
     idx = str(tmp_path / "idx_oldver")
-    monkeypatch.setattr(b, "CODE_VERSION", "dps-0.1")
+    monkeypatch.setattr(b, "CODE_VERSION", version)
     b.build_index(spark, corpus_dir, idx, n_shards=8, units=1, shard_groups=1)
     monkeypatch.undo()
     with pytest.raises(RuntimeError, match="rebuild required"):
         bm25_topk_wand(spark, idx, "def return", 5).collect()
+
+
+def test_incompatible_code_version_fails_loudly(spark, corpus_dir, tmp_path, monkeypatch):
+    _assert_rebuild_required(spark, corpus_dir, tmp_path, monkeypatch, "dps-0.1")
+
+
+def test_codec_tagged_version_fails_loudly(spark, corpus_dir, tmp_path, monkeypatch):
+    """dps-0.3 blocks carry a codec-tag byte that the one-codec decoder
+    would read as the bit width."""
+    _assert_rebuild_required(spark, corpus_dir, tmp_path, monkeypatch, "dps-0.3")

@@ -10,7 +10,7 @@ import bisect
 import numpy as np
 import pandas as pd
 
-from data_prepper_spark.index.varint import decode_doc_ids_payload, decode_payload
+from data_prepper_spark.index.bitpack import decode_doc_ids_payload, decode_payload
 from data_prepper_spark.query.common import B, K1
 from data_prepper_spark.query.wand import _EPS, _INF, _UB_INFLATE
 
