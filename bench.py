@@ -157,7 +157,11 @@ def main() -> None:
     # sweeps over the whole query set (interleaving spreads any host-noise
     # phase across all queries instead of concentrating it on one), and
     # each query keeps its per-sweep MINIMUM — the engine's time, not the
-    # hypervisor's. p50/p95 are over the per-query minima.
+    # hypervisor's. p50/p95 are over the per-query minima. `topk` answers a
+    # query within the engine's driver-path bounds at call time (one Arrow
+    # collect of its blocks, the dictionary pinned in the driver) and its
+    # frame collects with no job, so these rows time the driver path; a
+    # query above the bounds times the distributed plan.
     K_SWEEPS = 5
     engine = IndexQueryEngine(spark, out)
     for q in WAND_QUERIES:  # warmup sweep, excluded

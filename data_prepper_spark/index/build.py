@@ -78,6 +78,11 @@ BLOCKS_SCHEMA = (
     "term_hash long, shard int, block_id int, first_doc_id long, n_docs int, "
     "doc_gaps binary, tfs binary, dls binary, block_max_tf int, block_max_wtf double"
 )
+# posting_blocks as read back: the blocks are written partitionBy("shard")
+# under group=<g> dirs, so group and shard follow the data columns as
+# partition columns. Reading with it declared skips Spark's schema-inference
+# job on every open.
+BLOCKS_READ_SCHEMA = BLOCKS_SCHEMA.replace("shard int, ", "") + ", group int, shard int"
 
 
 def doc_id_col() -> F.Column:

@@ -64,8 +64,26 @@ def rank_top(df: DataFrame, k: int, *extra_cols: str) -> DataFrame:
     return df.orderBy(*order).limit(k).select(w.alias("rank"), "doc_id", "score", *extra_cols)
 
 
+def read_declared(spark: SparkSession, io: TableIO, name: str, schema: str) -> DataFrame:
+    """``io.read`` with ``schema`` declared on the parquet catalog, which
+    skips Spark's schema-inference job."""
+    if io.catalog == "parquet":
+        return spark.read.schema(schema).parquet(io.rpath(name))
+    return io.read(spark, name)
+
+
+def _corpus_stats(spark: SparkSession, io: TableIO) -> dict:
+    """The one ``corpus_stats`` row. On the parquet catalog pyarrow reads
+    it, as pyarrow wrote it (index/build._write_corpus_stats): no job."""
+    if io.catalog == "parquet":
+        import pyarrow.parquet as pq
+
+        return pq.read_table(io.path("corpus_stats")).to_pylist()[0]
+    return io.read(spark, "corpus_stats").collect()[0].asDict()
+
+
 def load_stats(spark: SparkSession, io: TableIO) -> tuple[int, float]:
-    r = io.read(spark, "corpus_stats").collect()[0]
+    r = _corpus_stats(spark, io)
     return int(r["n_docs"]), float(r["avgdl"])
 
 
@@ -83,9 +101,8 @@ def load_stats_full(spark: SparkSession, io: TableIO) -> tuple[int, float, int]:
     from ..index.build import check_index_compatibility
 
     check_index_compatibility(io, spark)
-    r = io.read(spark, "corpus_stats").collect()[0]
-    layered = int(r["layered"]) if "layered" in r.__fields__ else 0
-    return int(r["n_docs"]), float(r["avgdl"]), layered
+    r = _corpus_stats(spark, io)
+    return int(r["n_docs"]), float(r["avgdl"]), int(r.get("layered") or 0)
 
 
 def segdict_path(io: TableIO) -> str | None:
@@ -106,12 +123,7 @@ def dict_df(spark: SparkSession, io: TableIO):
     it adds one small union + per-term aggregation over term-pruned
     scans. All dictionary readers go through here so NRT segments are
     visible to term stats, multi-term expansion, and join-order hints."""
-    if not io.exists("dictionary"):
-        base = None
-    elif io.catalog == "parquet":
-        base = spark.read.schema(DICT_SCHEMA).parquet(io.rpath("dictionary"))
-    else:
-        base = io.read(spark, "dictionary")
+    base = read_declared(spark, io, "dictionary", DICT_SCHEMA) if io.exists("dictionary") else None
     seg = segdict_path(io)
     if seg is None:
         if base is None:
@@ -128,6 +140,21 @@ def dict_df(spark: SparkSession, io: TableIO):
     )
 
 
+# the dictionary columns a term's query stats come from
+STATS_COLS = ("term", "term_hash", "df", "max_wtf")
+
+
+def term_stats(term_hash: int, df: int, max_wtf: float | None, n_docs: int) -> dict:
+    """One term's query stats {df, hash, idf, max_wtf} from its
+    ``STATS_COLS`` dictionary values (a null ``max_wtf`` reads as 0)."""
+    return {
+        "df": int(df),
+        "hash": int(term_hash),
+        "idf": idf(n_docs, int(df)),
+        "max_wtf": float(max_wtf) if max_wtf is not None else 0.0,
+    }
+
+
 def lookup_term_stats(dictionary, terms: list[str], n_docs: int) -> dict[str, dict]:
     """{term: {df, hash, idf, max_wtf}} for the terms present in
     ``dictionary``, a ``dict_df`` frame: one driver collect.
@@ -140,20 +167,8 @@ def lookup_term_stats(dictionary, terms: list[str], n_docs: int) -> dict[str, di
     """
     if not terms:
         return {}
-    rows = (
-        dictionary.where(F.col("term").isin(terms))
-        .select("term", "term_hash", "df", "max_wtf")
-        .collect()
-    )
-    return {
-        r["term"]: {
-            "df": int(r["df"]),
-            "hash": int(r["term_hash"]),
-            "idf": idf(n_docs, int(r["df"])),
-            "max_wtf": float(r["max_wtf"]) if r["max_wtf"] is not None else 0.0,
-        }
-        for r in rows
-    }
+    rows = dictionary.where(F.col("term").isin(terms)).select(*STATS_COLS).collect()
+    return {r["term"]: term_stats(*r[1:], n_docs) for r in rows}
 
 
 def query_term_stats(

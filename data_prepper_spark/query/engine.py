@@ -1,10 +1,10 @@
 """Persistent query engine over a built index: the "search service" path.
 
 A real search deployment keeps the index hot: this engine loads
-``corpus_stats`` once, opens the dictionary once, keeps a driver-side
-cache of dictionary rows for seen terms, and (optionally) persists the
-``posting_blocks`` DataFrame so repeat queries scan executor memory
-instead of parquet. That mirrors how the reference's delegate
+``corpus_stats`` once, opens the dictionary once and pins it in the
+driver, keeps a cache of the stats of seen terms, and (optionally)
+persists the ``posting_blocks`` DataFrame so repeat queries scan executor
+memory instead of parquet. That mirrors how the reference's delegate
 (OpenSearch/Lucene) serves queries from page-cached segment files.
 ``wand.bm25_topk_wand`` is the one-shot form: a fresh engine over the
 unpersisted blocks per call.
@@ -17,16 +17,22 @@ knows the Σdf over the union of a batch's terms up front:
 - at most ``wand.DRIVER_MAX_POSTINGS`` postings and at most
   ``MAX_DEAD_IDS`` tombstones: the term-filtered blocks come to the driver
   through ONE Arrow collect and the shard kernels run there, no Python
-  worker, no merge or rank job. One Spark job when every term is in the
-  dictionary cache, two on a miss. ``topk_batch`` returns its rows as a
+  worker, no merge or rank job. With the dictionary pinned that is one
+  Spark job per call, cold or warm; without a pin a dictionary-cache miss
+  adds one lookup job. ``topk`` and ``topk_batch`` return their rows as a
   DataFrame over an Arrow table, a LocalTableScan whose collect runs no
   further job;
 - above either bound: the distributed plan (``_plan``) — shard kernels in
-  one ``mapInPandas`` closure, live-docs filter, rank per query.
+  one ``mapInPandas`` closure, live-docs filter, rank per query — which
+  ``topk`` and ``topk_batch`` return lazily.
 
-``topk`` is that distributed plan, or with ``result_cache_size`` > 0 the
-cached ``topk_rows`` answer wrapped like the batch rows. ``k`` = 0 is the
-empty answer (OpenSearch ``size: 0``), served with no job.
+The dictionary is pinned in the driver at construction: one Arrow collect
+of every term's stats, when it holds at most ``DRIVER_DICT_MAX`` terms.
+Query terms then resolve in the driver, the way Lucene resolves terms from
+its memory-resident terms index; a term absent from the index costs no job
+either. Above the bound each batch's dictionary-cache misses run one
+lookup job. ``k`` = 0 is the empty answer (OpenSearch ``size: 0``), served
+with no job.
 
 At design scale the blocks table exceeds cluster RAM; ``persist_blocks``
 uses MEMORY_AND_DISK so hot terms stay resident and cold ones spill —
@@ -45,10 +51,20 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from ..analyzer import tokenize_py
+from ..index.build import BLOCKS_READ_SCHEMA
 from ..tableio import TableIO
 from . import wand
-from .common import MAX_DEAD_IDS, dict_df, live_filter, load_stats_full, tombstones
-from .common import lookup_term_stats
+from .common import (
+    MAX_DEAD_IDS,
+    STATS_COLS,
+    dict_df,
+    live_filter,
+    load_stats_full,
+    lookup_term_stats,
+    read_declared,
+    term_stats,
+    tombstones,
+)
 
 _RESULT_ROW = Row("rank", "doc_id", "score")
 _TOPK_SCHEMA = pa.schema([("rank", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())])
@@ -56,6 +72,12 @@ _BATCH_SCHEMA = pa.schema([("query_id", pa.string()), *_TOPK_SCHEMA])
 
 # partitions of the distributed plan's blocks, hash-partitioned by shard
 SHARD_PARTITIONS = 8
+
+# dictionaries of at most this many terms are pinned in the driver at
+# construction. Measured on 4 vCPUs (NOTES.md "Pinned dictionary"): ~125-140
+# B per term in pandas and a ~1 s pin at 500k terms (~70 MB), against
+# 100-200 ms for each dictionary-cache miss a pin saves
+DRIVER_DICT_MAX = 500_000
 
 
 class IndexQueryEngine:
@@ -95,6 +117,7 @@ class IndexQueryEngine:
         # same snapshot covers them. Reusing the DataFrame also spares
         # every dictionary-cache miss a file listing and schema read.
         self._dict = dict_df(spark, self.io)
+        self._pinned = self._pin()
         # live-docs snapshot, pinned at construction like the generation
         # pointer: deletes issued later need a new engine (same rule as
         # refresh). Serving kernels widen per-shard top-k by the tombstone
@@ -103,7 +126,7 @@ class IndexQueryEngine:
         # every later engine keeps the widening and the live-docs filter.
         # Zero overhead when no delete ever happened.
         self._n_tombstones, self._dead_ids = tombstones(spark, self.io)
-        self.blocks = self.io.read(spark, "posting_blocks")
+        self.blocks = read_declared(spark, self.io, "posting_blocks", BLOCKS_READ_SCHEMA)
         self._prepartitioned = persist_blocks
         if persist_blocks:
             # persist already hash-partitioned by shard: the per-query plan
@@ -116,10 +139,33 @@ class IndexQueryEngine:
                 StorageLevel.MEMORY_AND_DISK
             )
 
+    def _pin(self) -> pd.DataFrame | None:
+        """The dictionary's stats columns indexed by term, from one Arrow
+        collect, or None above ``DRIVER_DICT_MAX`` terms. Kept in driver
+        memory: persisting it would grow the executors' block cache."""
+        pdf = self._dict.select(*STATS_COLS).limit(DRIVER_DICT_MAX + 1).toPandas()
+        if len(pdf) > DRIVER_DICT_MAX:
+            return None
+        pinned = pdf.fillna({"max_wtf": 0.0}).set_index("term")
+        # is_unique builds the term hash table now, so the first lookup does
+        # not; dictionary terms are unique by construction
+        return pinned if pinned.index.is_unique else None
+
     def _term_stats(self, terms: list[str]) -> dict[str, dict]:
+        """Stats of the terms in the dictionary. A term not yet in
+        ``_dict_cache`` resolves from the pinned dictionary with no Spark
+        job, or without a pin through one lookup job for all such terms."""
         missing = [t for t in terms if t not in self._dict_cache]
         if missing:
-            found = lookup_term_stats(self._dict, missing, self.n_docs)
+            if self._pinned is None:
+                found = lookup_term_stats(self._dict, missing, self.n_docs)
+            else:
+                pos = self._pinned.index.get_indexer(missing)
+                hit = self._pinned.iloc[pos[pos >= 0]]
+                found = {
+                    t: term_stats(*vals, self.n_docs)
+                    for t, *vals in hit.itertuples(name=None)
+                }
             for t in missing:
                 self._dict_cache[t] = found.get(t)
         return {t: s for t in terms if (s := self._dict_cache.get(t)) is not None}
@@ -153,15 +199,17 @@ class IndexQueryEngine:
         return self.spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema))
 
     def topk(self, query_text: str, k: int = 10) -> DataFrame:
-        """(rank int, doc_id long, score double) — the distributed plan for
-        a batch of one, or the cached ``topk_rows`` answer when the result
-        cache is on. One Spark job on the warm path."""
+        """(rank int, doc_id long, score double). Within the driver-path
+        bounds (module docstring), or on a result-cache hit, the rows are
+        computed at call time and returned as a DataFrame over an Arrow
+        table, whose collect runs no further job; above them, the lazy
+        distributed plan for a batch of one."""
         if self._result_cache_size:
             return self._local_df(self.topk_rows(query_text, k), _TOPK_SCHEMA)
-        per_q, union = self._per_query({"": query_text}, k)
-        if not union:
-            return self._local_df([], _TOPK_SCHEMA)
-        return self._plan(per_q, union, k).select(*_TOPK_SCHEMA.names)
+        answer = self._answer(query_text, k)
+        if isinstance(answer, DataFrame):
+            return answer
+        return self._local_df(answer, _TOPK_SCHEMA)
 
     def topk_rows(self, query_text: str, k: int = 10) -> list:
         """Collected (rank, doc_id, score) rows — the SERVING-path API.
@@ -215,13 +263,19 @@ class IndexQueryEngine:
             rows.extend((qid, i, d, s) for i, (d, s) in enumerate(hits[:k], start=1))
         return rows
 
-    def _serve(self, query_text: str, k: int) -> list:
+    def _answer(self, query_text: str, k: int) -> list | DataFrame:
+        """One query's (rank, doc_id, score) rows served on the driver, or
+        above the driver-path bounds its distributed plan."""
         per_q, union = self._per_query({"": query_text}, k)
         if not union:
             return []
         if not self._on_driver(union):
-            return self._plan(per_q, union, k).select(*_TOPK_SCHEMA.names).collect()
+            return self._plan(per_q, union, k).select(*_TOPK_SCHEMA.names)
         return [_RESULT_ROW(*r[1:]) for r in self._driver_rows(per_q, union, k)]
+
+    def _serve(self, query_text: str, k: int) -> list:
+        answer = self._answer(query_text, k)
+        return answer.collect() if isinstance(answer, DataFrame) else answer
 
     def topk_batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Evaluate MANY queries at once: (query_id string, rank int,

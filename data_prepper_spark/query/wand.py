@@ -410,7 +410,11 @@ def bm25_topk_wand(
     spark: SparkSession, index_dir: str, query_text: str, k: int = 10
 ) -> DataFrame:
     """Returns (rank int, doc_id long, score double) via block-max WAND: a
-    one-shot ``IndexQueryEngine.topk`` over the unpersisted blocks."""
+    one-shot ``IndexQueryEngine.topk`` over the unpersisted blocks. Within
+    the engine's driver-path bounds the answer is computed at call time,
+    in one job to pin the dictionary and one Arrow collect of the query's
+    blocks (plus a listing job when the blocks span more than 32 shard
+    dirs), and the returned frame's collect runs no job."""
     from .engine import IndexQueryEngine  # engine imports this module
 
     return IndexQueryEngine(spark, index_dir, persist_blocks=False).topk(query_text, k)

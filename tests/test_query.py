@@ -266,6 +266,27 @@ def _spy_fallback(monkeypatch, eng):
     return calls
 
 
+def _distributed_topk(eng, q, k):
+    """``topk`` rows from the distributed plan, forced with
+    DRIVER_MAX_POSTINGS = 0: the cross-check of the driver path."""
+    from data_prepper_spark.query import wand
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+        return eng.topk(q, k).collect()
+
+
+def _jobs(spark, group, call):
+    """(call(), the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _live_oracle(corpus_docs, q, k, dead=()):
     """Oracle top-k with tombstoned docs dropped after scoring (deleted docs
     still count in the statistics until refresh)."""
@@ -315,14 +336,14 @@ def _check_batch(eng, corpus_docs, on_driver, dead=()):
 @pytest.mark.parametrize("q,k", SERVING)
 def test_topk_rows_driver_path(spark, index_dir, corpus_docs, q, k, monkeypatch):
     """topk_rows answers on the driver (no distributed plan) with the same
-    rows as the lazy topk() plan and the oracle."""
+    rows as the distributed topk() plan and the oracle."""
     from data_prepper_spark.query.engine import IndexQueryEngine
 
     eng = IndexQueryEngine(spark, index_dir)
     fallback = _spy_fallback(monkeypatch, eng)
     got = eng.topk_rows(q, k)
     assert fallback == []
-    assert got == eng.topk(q, k).collect()
+    assert got == _distributed_topk(eng, q, k)
     assert _rows(got) == _norm(oracle_topk(corpus_docs, q, k))
     eng.close()
 
@@ -354,24 +375,33 @@ def test_topk_rows_fallback_above_driver_max(spark, index_dir, corpus_docs, monk
     assert len(fallback) == len(SERVING) - 1
 
 
-def test_topk_rows_layered_with_result_cache(spark, corpus_dir, corpus_docs, tmp_path, monkeypatch):
-    """Layered (NRT) index: the driver path prunes with tf-only bounds like
-    the distributed one, and the result cache serves its rows."""
+@pytest.fixture(scope="module")
+def layered_index(spark, corpus_dir, tmp_path_factory):
+    """A layered (NRT) index: half the corpus built, the other half added
+    with remerge=False."""
     import os
     import shutil
 
     from data_prepper_spark.index.build import add_to_index
-    from data_prepper_spark.query.engine import IndexQueryEngine
 
+    tmp = tmp_path_factory.mktemp("layered")
     files = sorted(f for f in os.listdir(corpus_dir) if f.endswith(".parquet"))
-    s1, s2 = str(tmp_path / "s1"), str(tmp_path / "s2")
+    s1, s2 = str(tmp / "s1"), str(tmp / "s2")
     os.makedirs(s1), os.makedirs(s2)
     for i, f in enumerate(files):
         shutil.copy(os.path.join(corpus_dir, f), s1 if i < len(files) // 2 else s2)
-    idx = str(tmp_path / "idx")
+    idx = str(tmp / "idx")
     build_index(spark, s1, idx, n_shards=8, units=1, shard_groups=2)
     add_to_index(spark, s2, idx, n_shards=8, units=1, remerge=False)
+    return idx
 
+
+def test_topk_rows_layered_with_result_cache(spark, layered_index, corpus_docs, monkeypatch):
+    """Layered (NRT) index: the driver path prunes with tf-only bounds like
+    the distributed one, and the result cache serves its rows."""
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    idx = layered_index
     plain = IndexQueryEngine(spark, idx, persist_blocks=False)
     cached = IndexQueryEngine(spark, idx, result_cache_size=4)
     # exhaustive_threshold=0 puts every shard on the block-max kernel
@@ -379,7 +409,7 @@ def test_topk_rows_layered_with_result_cache(spark, corpus_dir, corpus_docs, tmp
     assert cached._bounds == pruned._bounds == "tf"
     fallback = _spy_fallback(monkeypatch, cached)
     for q, k in SERVING:
-        want = plain.topk(q, k).collect()
+        want = _distributed_topk(plain, q, k)
         got = cached.topk_rows(q, k)
         assert got == want, q
         assert cached.topk_rows(q, k) is got  # cache hit: the same rows
@@ -414,7 +444,7 @@ def test_topk_rows_deletes(spark, corpus_dir, corpus_docs, tmp_path, monkeypatch
     got = {qq: few.topk_rows(qq, k) for qq, k in cases}
     assert fallback == []
     for qq, k in cases:
-        assert got[qq] == few.topk(qq, k).collect(), qq
+        assert got[qq] == _distributed_topk(few, qq, k), qq
         assert _rows(got[qq]) == _live_oracle(corpus_docs, qq, k, victims), qq
     _check_batch(few, corpus_docs, on_driver=True, dead=victims)
     few.close()
@@ -437,26 +467,22 @@ def test_topk_rows_deletes(spark, corpus_dir, corpus_docs, tmp_path, monkeypatch
 
 
 def test_topk_rows_job_structure(spark, index_dir):
-    """A warm query (block cache filled, every term in the dictionary
-    cache) runs exactly one Spark job: the Arrow collect of its blocks. A
-    query with an uncached term adds one dictionary job."""
+    """A single query runs exactly one Spark job, the Arrow collect of its
+    blocks, once the block cache is filled: warm (every term in the
+    dictionary cache) or cold (its terms resolve from the pinned
+    dictionary, no lookup job)."""
     from data_prepper_spark.query.engine import IndexQueryEngine
 
-    sc = spark.sparkContext
     eng = IndexQueryEngine(spark, index_dir)
     eng.topk_rows("the return", 10)  # fills the block cache
 
     def jobs(group, q):
-        sc.setJobGroup(group, q)
-        try:
-            rows = eng.topk_rows(q, 10)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        rows, n = _jobs(spark, group, lambda: eng.topk_rows(q, 10))
         assert rows
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return n
 
     assert jobs("serving_warm", "the return") == 1
-    assert jobs("serving_cold", "parseJson buffer") == 2
+    assert jobs("serving_cold", "parseJson buffer") == 1
     assert jobs("serving_rewarm", "parseJson buffer") == 1
     eng.close()
 
@@ -465,38 +491,36 @@ def test_topk_batch_job_structure(spark, index_dir):
     """A warm driver-path batch round (every term in the dictionary cache)
     runs one Spark job, the Arrow collect of its blocks: the result frame
     is a LocalTableScan, which collects in the driver with no job. A round
-    with uncached terms adds one dictionary job."""
+    with uncached terms runs that one job too: they resolve from the
+    pinned dictionary."""
     from data_prepper_spark.query.engine import IndexQueryEngine
 
-    sc = spark.sparkContext
     eng = IndexQueryEngine(spark, index_dir)
     warm = {"a": "the return", "b": "parseJson buffer"}
     eng.topk_batch(warm, 10).collect()  # fills the block and dictionary caches
 
     def jobs(group, queries):
-        sc.setJobGroup(group, group)
-        try:
-            rows = eng.topk_batch(queries, 10).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        rows, n = _jobs(spark, group, lambda: eng.topk_batch(queries, 10).collect())
         assert rows
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return n
 
     assert jobs("batch_warm", warm) == 1
-    assert jobs("batch_cold", {"a": "the", "b": "scanChunk emitState"}) == 2
+    assert jobs("batch_cold", {"a": "the", "b": "scanChunk emitState"}) == 1
     assert jobs("batch_rewarm", {"a": "the", "b": "scanChunk emitState"}) == 1
     eng.close()
 
 
 def test_driver_frames_run_no_python_worker(spark, index_dir):
     """Rows answered in the driver come back as DataFrames over an Arrow
-    table: the driver-path batch, the result-cached topk() frame and the
-    empty results collect in the JVM, with no PythonRDD in their lineage."""
+    table: the driver-path topk() and batch, the result-cached topk() frame
+    and the empty results collect in the JVM, with no PythonRDD in their
+    lineage."""
     from data_prepper_spark.query.engine import IndexQueryEngine
 
     eng = IndexQueryEngine(spark, index_dir)
     cached = IndexQueryEngine(spark, index_dir, result_cache_size=4)
     frames = {
+        "topk": eng.topk("the return", 10),
         "batch": eng.topk_batch({"a": "the return", "b": "parseJson"}, 10),
         "cached": cached.topk("the return", 10),
         "empty": eng.topk("qqqqxyzw", 10),
@@ -505,11 +529,75 @@ def test_driver_frames_run_no_python_worker(spark, index_dir):
     }
     for name, df in frames.items():
         assert "PythonRDD" not in df._jdf.rdd().toDebugString(), name
-    assert frames["cached"].collect() == eng.topk("the return", 10).collect()
+    assert frames["cached"].collect() == frames["topk"].collect()
+    assert frames["topk"].collect() == _distributed_topk(eng, "the return", 10)
     assert frames["batch"].count() == 20
     assert frames["empty"].collect() == frames["empty_batch"].collect() == []
     eng.close()
     cached.close()
+
+
+def test_unpinned_dictionary_matches_pinned(spark, index_dir, monkeypatch):
+    """Above DRIVER_DICT_MAX terms the engine pins nothing: a dictionary-
+    cache miss is again one extra lookup job, and every answer and term's
+    stats equal the pinned engine's."""
+    from data_prepper_spark.analyzer import tokenize_py
+    from data_prepper_spark.query import engine as engine_mod
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    pinned = IndexQueryEngine(spark, index_dir)
+    assert pinned._pinned is not None
+    monkeypatch.setattr(engine_mod, "DRIVER_DICT_MAX", 10)
+    eng = IndexQueryEngine(spark, index_dir)
+    assert eng._pinned is None
+    eng.topk_rows("the return", 10)  # fills the block cache
+    assert _jobs(spark, "unpinned_warm", lambda: eng.topk_rows("the return", 10))[1] == 1
+    assert _jobs(spark, "unpinned_cold", lambda: eng.topk_rows("parseJson buffer", 10))[1] == 2
+    for q, k in SERVING:
+        assert eng.topk_rows(q, k) == pinned.topk_rows(q, k), q
+    terms = sorted({t for q, _ in SERVING for t in tokenize_py(q)})
+    assert eng._term_stats(terms) == pinned._term_stats(terms)
+    eng.close()
+    pinned.close()
+
+
+def test_pinned_stats_on_layered_index(spark, layered_index):
+    """On a layered index the pin is the logical dictionary (base plus the
+    segments' side dictionaries): its stats equal a dictionary lookup's
+    for every SERVING term, and an absent term resolves to absent."""
+    from data_prepper_spark.analyzer import tokenize_py
+    from data_prepper_spark.query.common import query_term_stats
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    eng = IndexQueryEngine(spark, layered_index, persist_blocks=False)
+    assert eng.layered and eng._pinned is not None
+    terms = sorted({t for q, _ in SERVING for t in tokenize_py(q)})
+    want = query_term_stats(spark, eng.io, terms, eng.n_docs)
+    assert "qqqqxyzw" in terms and "qqqqxyzw" not in want
+    assert eng._term_stats(terms) == want
+
+
+def test_engine_open_and_cold_one_shot_job_counts(spark, index_dir):
+    """Opening an engine runs at most two jobs: the blocks' partition
+    listing (a job only above 32 shard dirs) and the dictionary pin, with
+    no schema inference. A cold one-shot bm25_topk_wand runs at most three,
+    and topk within the driver-path bounds does its work at call time:
+    collecting the frame runs no job."""
+    from data_prepper_spark.query.engine import IndexQueryEngine
+
+    eng, n_open = _jobs(spark, "engine_open", lambda: IndexQueryEngine(spark, index_dir))
+    assert n_open <= 2
+    cold, n_cold = _jobs(
+        spark, "cold_one_shot", lambda: bm25_topk_wand(spark, index_dir, "parseJson buffer", 10)
+    )
+    rows, n_collect = _jobs(spark, "cold_one_shot_collect", cold.collect)
+    assert rows and n_collect == 0
+    assert n_cold <= 3
+    eng.topk_rows("the return", 10)  # fills the block cache
+    frame, n_topk = _jobs(spark, "topk_call", lambda: eng.topk("parseJson buffer", 10))
+    assert n_topk == 1
+    assert _jobs(spark, "topk_collect", frame.collect) == (rows, 0)
+    eng.close()
 
 
 def test_k_zero_is_empty_and_negative_k_raises(spark, index_dir):
